@@ -168,7 +168,7 @@ def test_foreach_batch_static_reread_flags():
 
 def test_shipped_sink_bodies_are_clean():
     """Every foreachBatch body this repo ships passes its own lint."""
-    from video_streamer_spark.operators.merge import run_merge_upsert_sink
+    from video_streamer_spark.operators.table_format import run_acid_merge_sink
     from video_streamer_spark.plans.advisor import lint_foreach_batch
     from video_streamer_spark.streaming.agg_view import run_agg_view_pass
     from video_streamer_spark.streaming.incremental import (
@@ -186,7 +186,7 @@ def test_shipped_sink_bodies_are_clean():
     for fn in (
         run_foreach_batch_sink,
         run_bucketed_table_sink,
-        run_merge_upsert_sink,
+        run_acid_merge_sink,
         index_ingest_stream,
         index_upsert_stream,
         write_partial_batch,

@@ -998,69 +998,17 @@ def test_orc_round_trip(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,100)]" in text, text
 
 
-def test_merge_parquet_table_upsert_insert_delete(spark, tmp_path):
-    """Physical MERGE stand-in (operators/merge.py): all three arms land
-    correctly, re-applying the same changeset is a no-op (idempotent),
-    and UNTOUCHED hash buckets are not rewritten — the partition-pruned
-    touched-bucket rewrite that makes the pattern viable at 100 TB."""
-    import os
-
-    from video_streamer_spark.operators import merge as M
-
-    path = str(tmp_path / "t")
-    base = spark.range(100).select(
-        F.col("id").alias("key"), (F.col("id") * 10).alias("val")
-    )
-    M.init_merge_table(base, path, ["key"], n_buckets=8)
-
-    changes = spark.createDataFrame(
-        [(5, "U", 999), (1000, "I", 1), (7, "D", None)],
-        "key long, __op string, val long",
-    )
-    # snapshot per-bucket mtimes before the merge
-    def bucket_mtimes():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith("pb="):
-                full = os.path.join(path, d)
-                out[d] = max(
-                    os.path.getmtime(os.path.join(full, f))
-                    for f in os.listdir(full)
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    before = bucket_mtimes()
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=8)
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-    assert got[5] == 999 and got[1000] == 1 and 7 not in got
-    assert len(got) == 100  # 100 - 1 delete + 1 insert
-
-    # untouched buckets must not have been rewritten
-    touched = {
-        f"pb={r[0]}"
-        for r in M._bucketed(changes, ["key"], 8).select("pb").distinct().collect()
-    }
-    after = bucket_mtimes()
-    for d, t in before.items():
-        if d not in touched:
-            assert after[d] == t, f"untouched bucket {d} was rewritten"
-
-    # idempotence: same changeset again → identical end state
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=8)
-    again = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-    assert again == got
-
-
 def test_run_merge_upsert_sink_streaming(spark, tmp_path):
-    """Streaming CDC-apply: two micro-batches of changes merge into the
-    keyed table with upsert/delete semantics holding across epochs."""
-    from video_streamer_spark.operators import merge as M
+    """Streaming CDC-apply through the table format's MERGE sink
+    (``table_format.run_acid_merge_sink``): two micro-batches of changes
+    merge into the keyed table with upsert/delete semantics holding
+    across epochs."""
+    from video_streamer_spark.operators import table_format as tf
 
     path = str(tmp_path / "t")
     src = tmp_path / "changes"
     src.mkdir()
-    M.init_merge_table(
+    tf.create_table(
         spark.range(10).select(
             F.col("id").alias("key"), F.lit("base").alias("val")
         ),
@@ -1079,6 +1027,7 @@ def test_run_merge_upsert_sink_streaming(spark, tmp_path):
                     "key": pa.array(keys, pa.int64()),
                     "__op": pa.array(ops, pa.string()),
                     "val": pa.array(vals, pa.string()),
+                    "seq": pa.array([0] * len(keys), pa.int64()),
                 }
             ),
             str(src / name),
@@ -1088,11 +1037,9 @@ def test_run_merge_upsert_sink_streaming(spark, tmp_path):
     change_file("f2.parquet", [(42, "D", None), (4, "U", "later")])
     # FileStreamSource orders a listing by modification time, with
     # UNSPECIFIED tie-breaking when both files land in the same
-    # timestamp tick — the lexicographic-order assumption this test
-    # used to make flaked roughly one full-suite run in three (f2's
-    # delete of 42 processed before f1's insert lets 42 survive).
-    # Distinct mtimes make the intended order deterministic under both
-    # mtime- and path-ordering.
+    # timestamp tick; distinct mtimes make the intended order (f1's
+    # insert of 42 before f2's delete) deterministic under both mtime-
+    # and path-ordering.
     import os
     import time as _time
 
@@ -1101,42 +1048,19 @@ def test_run_merge_upsert_sink_streaming(spark, tmp_path):
     os.utime(src / "f2.parquet", (now - 5, now - 5))
 
     stream = (
-        spark.readStream.schema("key long, __op string, val string")
+        spark.readStream.schema("key long, __op string, val string, seq long")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    M.run_merge_upsert_sink(stream, path, ["key"], n_buckets=4)
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
+    tf.run_acid_merge_sink(
+        stream, path, ["key"], "seq", str(tmp_path / "ckpt")
+    )
+    got = {r["key"]: r["val"] for r in tf.read_table(spark, path).collect()}
     assert got[3] == "updated" and got[4] == "later"
     # 42 was inserted (f1, older mtime) then deleted (f2, newer)
     assert 42 not in got
     assert len(got) == 10
-
-
-def test_compact_parquet_dir(spark, tmp_path):
-    """Small-file compaction: 16 single-row-ish files merge to the
-    byte-targeted count, data survives byte-identically, a second run is
-    a no-op, and the original directory never disappears mid-rewrite
-    (swap via sibling temp dir)."""
-    from video_streamer_spark.operators.maintenance import (
-        compact_parquet_dir,
-        _dir_stats,
-    )
-
-    path = str(tmp_path / "t")
-    # 16 tiny files: one write per repartition slice
-    spark.range(1600).repartition(16).write.parquet(path)
-    n0, total = _dir_stats(path)
-    assert n0 == 16
-    res = compact_parquet_dir(spark, path, target_bytes=total)
-    assert res["compacted"] and res["files_after"] < n0
-    back = spark.read.parquet(path)
-    assert back.count() == 1600
-    assert back.agg(F.sum("id")).first()[0] == 1600 * 1599 // 2
-    # idempotent on schedule: second run is a no-op
-    res2 = compact_parquet_dir(spark, path, target_bytes=total)
-    assert not res2["compacted"]
-    assert res2["files_after"] == res["files_after"]
+    assert tf.current_version(path) == 3  # one commit per epoch
 
 
 def test_decode_bmp_property_round_trip():
@@ -1291,11 +1215,12 @@ def test_schema_evolution_merge_read(spark, tmp_path):
 def test_incremental_rollup_maintenance_via_merge(spark, tmp_path):
     """Materialized-rollup refresh without a full recompute: a daily
     aggregate table is maintained by recomputing ONLY the days a late
-    batch touches and MERGEing those rows back (operators/merge.py) —
-    the end state must equal a from-scratch rollup over base ∪ late.
-    At 100 TB this is the difference between re-aggregating the fact
-    table and re-aggregating two days of it."""
-    from video_streamer_spark.operators import merge as M
+    batch touches and MERGEing those rows back into the versioned table
+    (``table_format.merge_table``) — the end state must equal a
+    from-scratch rollup over base ∪ late. At 100 TB this is the
+    difference between re-aggregating the fact table and re-aggregating
+    two days of it."""
+    from video_streamer_spark.operators import table_format as tf
 
     path = str(tmp_path / "rollup")
     base = spark.createDataFrame(
@@ -1306,7 +1231,7 @@ def test_incremental_rollup_maintenance_via_merge(spark, tmp_path):
     rollup = base.groupBy("day").agg(
         F.count("*").alias("n"), F.sum("v").alias("s")
     )
-    M.init_merge_table(rollup, path, ["day"], n_buckets=4)
+    tf.create_table(rollup, path, ["day"], n_buckets=4)
 
     late = spark.createDataFrame(
         [("2024-01-02", 3.0), ("2024-01-04", 9.0)], "day string, v double"
@@ -1320,11 +1245,11 @@ def test_incremental_rollup_maintenance_via_merge(spark, tmp_path):
         .agg(F.count("*").alias("n"), F.sum("v").alias("s"))
         .withColumn("__op", F.lit("U"))
     )
-    M.merge_parquet_table(spark, path, fresh, ["day"], n_buckets=4)
+    tf.merge_table(spark, path, fresh)
 
     got = {
         r["day"]: (r["n"], r["s"])
-        for r in M.read_merge_table(spark, path).collect()
+        for r in tf.read_table(spark, path).collect()
     }
     want = {
         r["day"]: (r["n"], r["s"])
@@ -1365,80 +1290,6 @@ def test_compact_changeset_seq_lww_and_no_seq_assert(spark):
     # single-op-per-key batches pass through untouched
     clean = batch.where(F.col("seq").isin(30, 5)).drop("seq")
     assert M.compact_changeset(clean, ["key"], None).count() == 2
-
-
-def test_merge_partial_commit_replay(spark, tmp_path):
-    """Crash contract of merge_parquet_table: the per-partition commit
-    can leave a strict subset of touched buckets merged. Simulate by
-    snapshotting one touched bucket pre-merge, merging, then restoring
-    that bucket (as if its commit never landed) — replaying the SAME
-    changeset must converge the table to the full post-merge state."""
-    import shutil
-
-    from video_streamer_spark.operators import merge as M
-
-    path = str(tmp_path / "t")
-    base = spark.range(60).select(
-        F.col("id").alias("key"), (F.col("id") * 10).alias("val")
-    )
-    M.init_merge_table(base, path, ["key"], n_buckets=4)
-
-    changes = spark.createDataFrame(
-        [(5, "U", 999), (1000, "I", 1), (7, "D", None), (23, "U", 777)],
-        "key long, __op string, val long",
-    )
-    touched = sorted(
-        r["pb"]
-        for r in M._bucketed(changes, ["key"], 4).select("pb").distinct().collect()
-    )
-    assert len(touched) >= 2, "need ≥2 touched buckets to simulate a partial commit"
-    victim = f"pb={touched[0]}"
-    backup = str(tmp_path / "victim-backup")
-    shutil.copytree(f"{path}/{victim}", backup)
-
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=4)
-    want = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-
-    # crash simulation: victim bucket's commit is rolled back
-    shutil.rmtree(f"{path}/{victim}")
-    shutil.copytree(backup, f"{path}/{victim}")
-    partial = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-    assert partial != want  # genuinely partial
-
-    # recovery = idempotent replay of the same changeset
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=4)
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-    assert got == want
-
-
-def test_compact_crash_recovery(spark, tmp_path):
-    """ADVICE r4: a crash between the two swap renames strands the table
-    at <path>.compact-old with the live path missing; the next run must
-    self-heal (restore, then compact) instead of failing."""
-    import os
-
-    from video_streamer_spark.operators.maintenance import (
-        _dir_stats,
-        compact_parquet_dir,
-    )
-
-    path = str(tmp_path / "t")
-    spark.range(400).repartition(8).write.parquet(path)
-    _, total = _dir_stats(path)
-
-    # simulate the crash window: path renamed away, half-written tmp left
-    os.rename(path, path + ".compact-old")
-    os.makedirs(path + ".compact-tmp")
-    with open(path + ".compact-tmp/garbage", "w") as f:
-        f.write("half-written")
-
-    res = compact_parquet_dir(spark, path, target_bytes=total)
-    assert res["compacted"]
-    assert not os.path.exists(path + ".compact-old")
-    assert not os.path.exists(path + ".compact-tmp")
-    back = spark.read.parquet(path)
-    assert back.count() == 400
-    assert back.agg(F.sum("id")).first()[0] == 400 * 399 // 2
 
 
 def test_wav_riff_size_exact(spark):
@@ -1740,62 +1591,68 @@ def test_zorder_layout_prunes_both_dims(spark, tmp_path):
 
 
 def test_versioned_snapshots_time_travel(spark, tmp_path):
-    """Snapshot versioning (operators/maintenance.py): pointer-last
-    commit gives time travel, orphaned crashed writes are never served,
-    and vacuum keeps the newest committed versions."""
+    """Snapshot versioning on the versioned table
+    (operators/table_format.py): every commit is a readable version
+    (time travel), a crashed write whose manifest never landed is
+    never served, and vacuum keeps the newest committed versions while
+    sweeping the crashed write's data."""
     import os
 
-    from video_streamer_spark.operators.maintenance import (
-        latest_table_version,
-        read_table_version,
-        vacuum_table_versions,
-        versioned_write,
-    )
-
-    path = str(tmp_path / "t")
-    v1 = versioned_write(spark.range(10), path)
-    v2 = versioned_write(spark.range(20), path)
-    assert (v1, v2) == (1, 2)
-    assert latest_table_version(path) == 2
-    assert read_table_version(spark, path).count() == 20
-    assert read_table_version(spark, path, 1).count() == 10
-
-    # crashed write: data dir exists but the commit log never named it
-    spark.range(99).write.parquet(os.path.join(path, "v=3"))
-    assert latest_table_version(path) == 2  # orphan invisible
-    assert read_table_version(spark, path).count() == 20
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="not committed"):
-        read_table_version(spark, path, 3)
+    from video_streamer_spark.operators import table_format as tf
 
-    v4 = versioned_write(spark.range(40), path)
-    assert v4 == 4  # never reuses the orphan's number
-    # even with a LATER commit over it, the orphan stays unreadable —
-    # the log, not the pointer, decides what exists
-    with _pytest.raises(ValueError, match="not committed"):
-        read_table_version(spark, path, 3)
-    removed = vacuum_table_versions(path, keep_last=2)
-    assert sorted(removed) == [1, 3]  # old committed + orphan; 2 and 4 stay
-    assert read_table_version(spark, path, 2).count() == 20
-    assert read_table_version(spark, path).count() == 40
-    with _pytest.raises(ValueError, match="not committed"):
-        read_table_version(spark, path, 1)  # vacuumed
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("key"), (F.col("id") * 10).alias("val")
+        )
+
+    def upserts(lo, hi):
+        return rows(lo, hi).withColumn("__op", F.lit("I"))
+
+    path = str(tmp_path / "t")
+    v1 = tf.create_table(rows(0, 10), path, ["key"], n_buckets=4)
+    v2 = tf.merge_table(spark, path, upserts(10, 20))
+    assert (v1, v2) == (1, 2)
+    assert tf.current_version(path) == 2
+    assert tf.read_table(spark, path).count() == 20
+    assert tf.read_table(spark, path, 1).count() == 10
+
+    # crashed write: a commit's data landed but no manifest names it
+    orphan = os.path.join(path, "data", "commit-crashed")
+    rows(0, 99).write.parquet(os.path.join(orphan, "pb=0"))
+    assert tf.current_version(path) == 2  # orphan invisible
+    assert tf.read_table(spark, path).count() == 20
+    with _pytest.raises(FileNotFoundError):
+        tf.read_table(spark, path, 3)
+
+    v3 = tf.merge_table(spark, path, upserts(20, 40))
+    assert v3 == 3
+    # even with a LATER commit over it, the orphan stays unread — the
+    # manifest log, not the data directory, decides what exists
+    assert tf.read_table(spark, path).count() == 40
+    tf.vacuum(path, keep_last=2, min_age_sec=0)
+    assert tf.history(path) == [2, 3]
+    assert not os.path.exists(orphan)
+    assert tf.read_table(spark, path, 2).count() == 20
+    assert tf.read_table(spark, path).count() == 40
+    with _pytest.raises(tf.VersionVacuumedError):
+        tf.read_table(spark, path, 1)  # vacuumed
 
 
 def test_run_merge_upsert_sink_with_seq(spark, tmp_path):
     """Streaming CDC-apply with per-key HISTORY in one batch: the
-    seq-ordered compaction must apply the highest-sequence op per key,
-    deterministically."""
+    MERGE sink's seq-ordered compaction must apply the highest-sequence
+    op per key, deterministically."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from video_streamer_spark.operators import merge as M
+    from video_streamer_spark.operators import table_format as tf
 
     path = str(tmp_path / "t")
     src = tmp_path / "changes"
     src.mkdir()
-    M.init_merge_table(
+    tf.create_table(
         spark.range(5).select(
             F.col("id").alias("key"), F.lit("base").alias("val")
         ),
@@ -1818,8 +1675,10 @@ def test_run_merge_upsert_sink_with_seq(spark, tmp_path):
     stream = spark.readStream.schema(
         "key long, __op string, val string, seq long"
     ).parquet(str(src))
-    M.run_merge_upsert_sink(stream, path, ["key"], n_buckets=4, seq_col="seq")
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
+    tf.run_acid_merge_sink(
+        stream, path, ["key"], "seq", str(tmp_path / "ckpt")
+    )
+    got = {r["key"]: r["val"] for r in tf.read_table(spark, path).collect()}
     assert got[1] == "final"  # highest seq won, not an arbitrary row
     assert 2 not in got
     assert len(got) == 4
@@ -2722,51 +2581,6 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
     assert fps[1] & fps[2], sel
 
 
-def test_result_cache_hit_miss_and_invalidation(spark, tmp_path):
-    """Result cache contract: first call builds (miss), second serves
-    the cache (hit, plan is a plain scan of the cache path, builder NOT
-    invoked), input mutation invalidates (miss again)."""
-    import os
-
-    from video_streamer_spark.operators.result_cache import cached_result
-
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    spark.range(100).withColumnRenamed("id", "v").coalesce(1).write.parquet(
-        str(tmp_path / "stage")
-    )
-    for f in os.listdir(str(tmp_path / "stage")):
-        if f.endswith(".parquet"):
-            os.rename(
-                os.path.join(str(tmp_path / "stage"), f),
-                os.path.join(src, "t.parquet"),
-            )
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return (
-            spark.read.parquet(os.path.join(src, "t.parquet"))
-            .groupBy((F.col("v") % 10).alias("b"))
-            .count()
-        )
-
-    root = str(tmp_path / "cache")
-    df1, hit1 = cached_result(spark, "agg", src, build, cache_root=root)
-    assert not hit1 and calls["n"] == 1
-    want = sorted(map(tuple, df1.collect()))
-
-    df2, hit2 = cached_result(spark, "agg", src, build, cache_root=root)
-    assert hit2 and calls["n"] == 1
-    assert sorted(map(tuple, df2.collect())) == want
-    assert all(root in p for p in df2.inputFiles())  # serves the cache
-
-    # mutate the input -> stale -> rebuild
-    os.utime(os.path.join(src, "t.parquet"))
-    _, hit3 = cached_result(spark, "agg", src, build, cache_root=root)
-    assert not hit3 and calls["n"] == 2
-
-
 def test_asof_join_quotes_awkward_column_names(spark):
     """asof_join interpolates caller column names into SQL strings; they
     ride in backticks so dashes/keywords survive (review regression)."""
@@ -3005,6 +2819,28 @@ def test_lsh_bucket_cache_bounded_to_one(spark):
         assert not (lvl.useMemory or lvl.useDisk), (
             "a previous LSH bucket table is still cached — eviction broken"
         )
+
+
+def test_iterative_pools_shrink_with_fewer_rounds(spark):
+    """Per-round pools are named ``<site>-r<i>``: a pagerank run with
+    fewer rounds than the previous one must not leave the previous
+    run's higher rounds cached (5 rounds persist r0..r3; a following
+    2-round run needs only r0)."""
+    from video_streamer_spark.functions import caching
+    from video_streamer_spark.operators.dedup import pagerank_iterations
+
+    nodes = spark.range(1, 7).select(F.col("id").alias("node"))
+    edges = nodes.select(
+        F.col("node").alias("src"), (F.col("node") % 6 + 1).alias("dst")
+    )
+    pagerank_iterations(nodes, edges, n_iter=5).count()
+    stale = [caching._POOLS[f"pagerank-r{i}"] for i in (2, 3)]
+    pagerank_iterations(nodes, edges, n_iter=2).count()
+    rounds = sorted(p for p in caching._POOLS if p.startswith("pagerank-r"))
+    assert rounds == ["pagerank-r0"], rounds
+    for df in stale:
+        lvl = df.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk), "stale round still cached"
 
 
 def test_session_cache_footprint_is_bounded_across_repeats(spark):

@@ -453,68 +453,6 @@ def test_sliding_stream_equals_batch(spark):
     assert rows_set(got) == rows_set(want)
 
 
-def test_stateful_sessions_v2_transform_with_state(spark):
-    """The transformWithStateInPandas sessionizer (modern state API) must
-    satisfy the same batch sandwich as the applyInPandasWithState one:
-    required ⊆ emitted ⊆ all batch sessions, no duplicates — proving the
-    session logic ports across Spark's state API generations."""
-    # TWS's state protocol speaks protobuf; this container does not ship
-    # google.protobuf (and installs are off-limits), so the modern-API
-    # path can only run where protobuf exists. The v1 sessionizer above
-    # is the in-container verified implementation.
-    pytest.importorskip("google.protobuf.descriptor")
-    from video_streamer_spark.queries.temporal import SESSION_GAP_SECONDS
-    from video_streamer_spark.streaming.stateful_v2 import stateful_sessions_v2
-
-    stream = stateful_sessions_v2(
-        sp.events_stream(spark, SF_ORACLE), gap_seconds=SESSION_GAP_SECONDS
-    )
-    name = sp.run_available_now(stream, "stateful_sessions_v2_sink", "append")
-    got = [
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    ]
-
-    from pyspark.sql.window import Window
-
-    e = table(spark, SF_ORACLE, "events")
-    w_lag = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = w_lag.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = e.select(
-        "user_id", "ts", "event_id",
-        F.when(
-            F.lag("ts").over(w_lag).isNull()
-            | ((F.col("ts").cast("double") - F.lag("ts").over(w_lag).cast("double"))
-               > SESSION_GAP_SECONDS),
-            1,
-        ).otherwise(0).alias("is_new"),
-    )
-    sessions = flagged.select(
-        "user_id", "ts", F.sum("is_new").over(w_run).alias("session_id")
-    )
-    bounds = sessions.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
-    )
-    last = bounds.groupBy("user_id").agg(F.max("session_id").alias("last_id"))
-    as_tuple = lambda r: (  # noqa: E731
-        r["user_id"], r["session_start"], r["session_end"], r["n_events"]
-    )
-    all_sessions = {as_tuple(r) for r in bounds.collect()}
-    required = {
-        as_tuple(r)
-        for r in bounds.join(
-            last,
-            (bounds.user_id == last.user_id) & (bounds.session_id == last.last_id),
-            "left_anti",
-        ).collect()
-    }
-    got_set = set(got)
-    assert len(got) == len(got_set) > 0
-    assert required <= got_set <= all_sessions
-
-
 def test_rowwise_signatures_equal_batch_signatures(spark):
     """The shuffle-free (streaming-shape) minhash signatures must be
     bit-identical to the exploded+partial-agg batch form."""
@@ -909,231 +847,6 @@ def test_incremental_rollup_equals_batch(spark):
     )
     assert got == want
     assert len(got) > 1
-
-
-def test_incremental_rollup_epoch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch may replay an epoch after a failure: re-journaling the
-    same epoch must leave the combined rollup unchanged (overwrite, not
-    accumulate)."""
-    from video_streamer_spark.catalog import table
-    from video_streamer_spark.streaming.incremental import (
-        combine_rollup,
-        write_partial_batch,
-    )
-
-    journal = str(tmp_path / "journal")
-    e = table(spark, SF_SMOKE, "events")
-    half_a = e.where("event_id % 2 = 0").select("ts", "event_type", "value")
-    half_b = e.where("event_id % 2 = 1").select("ts", "event_type", "value")
-    write_partial_batch(half_a, 0, journal)
-    write_partial_batch(half_b, 1, journal)
-    once = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    # replay epoch 1 (same data, same epoch id) — a crash-retry
-    write_partial_batch(half_b, 1, journal)
-    twice = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    assert once == twice
-
-
-def test_incremental_rollup_compaction_preserves_result(spark, tmp_path):
-    """Folding the journal must not change the combined rollup, must
-    bound the journal to one epoch dir, and must survive a rerun."""
-    from video_streamer_spark.catalog import table
-    from video_streamer_spark.streaming.incremental import (
-        combine_rollup,
-        compact_journal,
-        write_partial_batch,
-    )
-
-    journal = str(tmp_path / "journal")
-    e = table(spark, SF_SMOKE, "events")
-    for i in range(4):
-        write_partial_batch(
-            e.where(f"event_id % 4 = {i}").select("ts", "event_type", "value"),
-            i,
-            journal,
-        )
-    before = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    stats = compact_journal(spark, journal)
-    assert stats["epochs_folded"] == 4
-    after = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    assert before == after
-    import os
-
-    assert [d for d in os.listdir(journal) if d.startswith("batch-")] == [
-        "batch-compacted"
-    ]
-    # compacting an already-compacted journal is a safe no-op fold
-    compact_journal(spark, journal)
-    again = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    assert before == again
-
-
-def test_incremental_journal_epochs_are_staged_atomically(spark, tmp_path):
-    """No .staging-* dirs survive a write, and the batch-* glob a reader
-    uses can never match a staging dir name."""
-    import os
-
-    from video_streamer_spark.catalog import table
-    from video_streamer_spark.streaming.incremental import write_partial_batch
-
-    journal = str(tmp_path / "journal")
-    e = table(spark, SF_SMOKE, "events").select("ts", "event_type", "value")
-    write_partial_batch(e, 7, journal)
-    entries = os.listdir(journal)
-    assert "batch-7" in entries
-    assert not [d for d in entries if d.startswith(".staging")]
-    # replay: same epoch again — still exactly one complete dir
-    write_partial_batch(e, 7, journal)
-    entries = os.listdir(journal)
-    assert entries.count("batch-7") == 1
-    assert not [d for d in entries if d.startswith(".staging")]
-
-
-def test_incremental_replay_after_compaction_does_not_double_count(spark, tmp_path):
-    """A foreachBatch replay of an epoch the compaction already folded
-    must be a no-op: the fold manifest carries its id, so re-journaling
-    (which would double-count inside the combined rollup) is skipped."""
-    from video_streamer_spark.catalog import table
-    from video_streamer_spark.streaming.incremental import (
-        combine_rollup,
-        compact_journal,
-        write_partial_batch,
-    )
-
-    journal = str(tmp_path / "journal")
-    e = table(spark, SF_SMOKE, "events")
-    half_a = e.where("event_id % 2 = 0").select("ts", "event_type", "value")
-    half_b = e.where("event_id % 2 = 1").select("ts", "event_type", "value")
-    write_partial_batch(half_a, 0, journal)
-    write_partial_batch(half_b, 1, journal)
-    want = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    compact_journal(spark, journal)
-    # crash-before-checkpoint-commit scenario: epoch 1 replays AFTER
-    # its rows were folded
-    write_partial_batch(half_b, 1, journal)
-    got = sorted(tuple(r) for r in combine_rollup(spark, journal).collect())
-    assert got == want
-    # and a brand-new later epoch still lands normally
-    write_partial_batch(half_a, 2, journal)
-    grown = combine_rollup(spark, journal)
-    n_events = sum(r["n_events"] for r in grown.collect())
-    assert n_events == sum(r[2] for r in want) + half_a.count()
-
-
-def test_incremental_journal_crash_chaos_all_stages(spark, tmp_path):
-    """Injected crash at EVERY stage boundary of the epoch-replay swap
-    and the compaction swap: recovery (heal_journal_residue /
-    heal_swap_residue, both invoked by the normal entry points) must
-    converge to the same combined rollup — batch-composition invariance
-    holds across a crash at any boundary (round-6 VERDICT item 6)."""
-    import os
-    import shutil
-
-    from video_streamer_spark.catalog import table
-    from video_streamer_spark.streaming.incremental import (
-        combine_rollup,
-        compact_journal,
-        write_partial_batch,
-    )
-
-    e = table(spark, SF_SMOKE, "events")
-    halves = [
-        e.where(f"event_id % 2 = {i}").select("ts", "event_type", "value")
-        for i in range(2)
-    ]
-
-    def fresh(tag):
-        journal = str(tmp_path / f"journal-{tag}")
-        write_partial_batch(halves[0], 0, journal)
-        write_partial_batch(halves[1], 1, journal)
-        return journal
-
-    want = sorted(
-        tuple(r) for r in combine_rollup(spark, fresh("want")).collect()
-    )
-
-    # -- replay-swap crash states (write_partial_batch's two renames) --
-    # state A: staged written, old epoch moved aside, final missing
-    j = fresh("a")
-    os.rename(f"{j}/batch-1", f"{j}/.replaced-batch-1")
-    staged = f"{j}/.staging-batch-1"
-    shutil.copytree(f"{j}/.replaced-batch-1", staged)
-    got = sorted(tuple(r) for r in combine_rollup(spark, j).collect())
-    assert got == want
-    assert not [d for d in os.listdir(j) if d.startswith(".")]
-
-    # state B: second rename done, .replaced cleanup missed (the
-    # forever-leak ADVICE flagged: a later replay must not resurrect it)
-    j = fresh("b")
-    shutil.copytree(f"{j}/batch-1", f"{j}/.replaced-batch-1")
-    write_partial_batch(halves[1], 1, j)  # replay heals then swaps
-    got = sorted(tuple(r) for r in combine_rollup(spark, j).collect())
-    assert got == want
-    assert not [d for d in os.listdir(j) if d.startswith(".")]
-
-    # state C: crash mid-parquet-write — incomplete stage beside intact
-    # final must be discarded, not promoted
-    j = fresh("c")
-    os.makedirs(f"{j}/.staging-batch-1")
-    with open(f"{j}/.staging-batch-1/part-junk.parquet", "w") as fh:
-        fh.write("not parquet")
-    got = sorted(tuple(r) for r in combine_rollup(spark, j).collect())
-    assert got == want
-
-    # state D: between renames with an INCOMPLETE stage (no _SUCCESS):
-    # the replaced original must be restored
-    j = fresh("d")
-    os.rename(f"{j}/batch-1", f"{j}/.replaced-batch-1")
-    os.makedirs(f"{j}/.staging-batch-1")
-    got = sorted(tuple(r) for r in combine_rollup(spark, j).collect())
-    assert got == want
-
-    # -- compaction crash states (manifest write .. old-tree removal) --
-    # state E: crash after fold staged to .compact-tmp, before swap
-    j = fresh("e")
-    compact_journal(spark, j)
-    # simulate: a new epoch, then a fold that died pre-swap
-    write_partial_batch(halves[0], 2, j)
-    shutil.copytree(j, j + ".compact-tmp")
-    got = sorted(
-        (r[0], r[1]) for r in combine_rollup(spark, j).collect()
-    )  # recovery discards tmp; rows unchanged
-    stats = compact_journal(spark, j)
-    assert stats["epochs_folded"] == 2  # batch-compacted + batch-2
-    # state F: crash between compaction's two renames — journal gone,
-    # old tree stranded; heal restores it
-    shutil.move(j, j + ".compact-old")
-    got2 = sorted(tuple(r) for r in combine_rollup(spark, j).collect())
-    # replay of a folded epoch after all that chaos: still skipped
-    write_partial_batch(halves[1], 1, j)
-    got3 = sorted(tuple(r) for r in combine_rollup(spark, j).collect())
-    assert got2 == got3
-
-
-def test_incremental_journal_scope_mismatch_refuses(spark, tmp_path):
-    """Epoch ids restart at 0 under a fresh checkpoint: a journal whose
-    manifest was folded under one stream scope must REFUSE a writer from
-    a different scope instead of silently dropping its early epochs
-    (round-6 ADVICE, medium)."""
-    import pytest as _pytest
-
-    from video_streamer_spark.catalog import table
-    from video_streamer_spark.streaming.incremental import (
-        compact_journal,
-        write_partial_batch,
-    )
-
-    journal = str(tmp_path / "journal")
-    e = table(spark, SF_SMOKE, "events").select("ts", "event_type", "value")
-    write_partial_batch(e, 0, journal, scope="ckpt-run-1")
-    compact_journal(spark, journal, scope="ckpt-run-1")
-    # same scope: replay of folded epoch 0 skips (idempotent), new OK
-    write_partial_batch(e, 0, journal, scope="ckpt-run-1")
-    # NEW stream (fresh checkpoint, epoch ids restart at 0): refuse
-    with _pytest.raises(RuntimeError, match="scope"):
-        write_partial_batch(e, 0, journal, scope="ckpt-run-2")
-    with _pytest.raises(RuntimeError, match="scope"):
-        compact_journal(spark, journal, scope="ckpt-run-2")
 
 
 def test_incremental_join_view_batch_composition_invariance(spark):

@@ -47,6 +47,20 @@ def bounded_persist(df: DataFrame, pool: str) -> DataFrame:
     return df
 
 
+def evict_pools(prefix: str) -> None:
+    """Unpersist and forget every pool whose name starts with
+    ``prefix``. Iterative operators name one pool per round
+    (``<site>-r<i>``) and call this at entry, so a run with fewer
+    rounds than the previous one leaves none of the higher rounds'
+    caches behind."""
+    with _LOCK:
+        for pool in [p for p in _POOLS if p.startswith(prefix)]:
+            try:
+                _POOLS.pop(pool).unpersist()
+            except Exception:
+                pass  # session torn down between calls; nothing cached
+
+
 def pooled(pool: str):
     """Chain-friendly adapter: ``df.transform(pooled("site-name"))`` is
     ``bounded_persist(df, "site-name")`` without breaking a method

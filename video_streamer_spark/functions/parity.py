@@ -109,7 +109,3 @@ def sql_round6(expr: str) -> str:
 
 def sql_qdec6(expr: str) -> str:
     return f"CAST(ROUND(CAST(({expr}) AS DECIMAL(38,9)), 6) AS DECIMAL(18,6))"
-
-
-def sql_dec(expr: str, precision: int = 18, scale: int = 6) -> str:
-    return f"CAST(({expr}) AS DECIMAL({precision},{scale}))"

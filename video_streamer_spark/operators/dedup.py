@@ -701,8 +701,12 @@ def pagerank_iterations(
     Values are unchanged (a cache stores exactly the rows the subtree
     computes, and an evicted cache recomputes the same lineage).
     """
-    from video_streamer_spark.functions.caching import bounded_persist
+    from video_streamer_spark.functions.caching import (
+        bounded_persist,
+        evict_pools,
+    )
 
+    evict_pools("pagerank-")
     edges = bounded_persist(edges, "pagerank-edges")
     nodes = bounded_persist(
         nodes.select(F.col(node_col).alias("node")), "pagerank-nodes"

@@ -160,14 +160,6 @@ def nms(
     return det.groupBy(frame_col).applyInPandas(suppress, out_schema)
 
 
-def box_color(label_id: "F.Column | int"):
-    """Deterministic label→RGB mapping (reference O19 int_to_rgb,
-    gst-detection-tf.py: label-indexed color table): three coprime
-    multipliers mod 256, identically computable in SQL."""
-    lab = F.lit(label_id) if isinstance(label_id, int) else label_id
-    return ((lab * 37) % 256, (lab * 59) % 256, (lab * 83) % 256)
-
-
 def annotate_frames(
     frames: DataFrame,
     det: DataFrame,

@@ -1,43 +1,27 @@
-"""MERGE / upsert: the ACID-table-format role (Delta/Iceberg MERGE INTO)
-re-expressed over plain DataFrames and parquet.
+"""MERGE / upsert changeset algebra: the logical half of the ACID-table
+role (Delta/Iceberg MERGE INTO), shared by the versioned table format
+(``operators/table_format.py``) and its SQL surface.
 
 The reference's only sink is a bulk end-of-run flush into a queryable
 store (gst-detection-tf.py:339-344 — VDMS AddBoundingBox batching); a
 production 100 TB curation pipeline instead maintains a keyed table that
-each batch of changes UPSERTS into. No table-format package ships in this
-container, so the capability lands in two honest layers:
-
-1. ``apply_changeset`` — the LOGICAL merge: given a base relation and a
-   keyed changeset carrying an op column ('U' upsert / 'I' insert /
-   'D' delete), produce the post-merge relation. This is exactly the
-   join Delta's MERGE plans (changes ⟕ base on key): one shuffle on the
-   key, no driver materialization, fully expressible to Catalyst.
-
-2. ``merge_parquet_table`` — the PHYSICAL stand-in: the table lives as
-   parquet hash-partitioned into N fixed buckets on the key
-   (``pb=<bucket>`` directories). A merge reads ONLY the buckets the
-   changeset touches (partition pruning on a pushed-down IN filter),
-   merges them, and dynamically overwrites just those partitions —
-   the same touched-file-rewrite shape as Delta MERGE, with the bucket
-   as the rewrite granularity. Idempotent: re-applying the same
-   changeset is a no-op by construction (upserts replace, deletes stay
-   deleted). At 100 TB the bucket count scales with the table so a
-   point-update rewrites ~1/N of the data, never the whole table.
-
-``run_merge_upsert_sink`` drives layer 2 from Structured Streaming via
-foreachBatch — the streaming CDC-apply pattern.
+each batch of changes UPSERTS into. This module is the relational core
+of that: given a base relation and a keyed changeset carrying an op
+column ('U' upsert / 'I' insert / 'D' delete), ``apply_changeset``
+produces the post-merge relation — exactly the join Delta's MERGE plans
+(changes ⟕ base on key): one shuffle on the key, no driver
+materialization, fully expressible to Catalyst. ``diff_snapshots`` is
+its inverse, ``compact_changeset`` the per-key last-write-wins a CDC
+batch needs first, and ``_bucketed`` the key-hash routing every table
+write and point lookup passes through. The physical, atomically
+committed table lives in ``table_format``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from video_streamer_spark.streaming.drain import drain_or_raise
 
 OP_COL = "__op"
 BUCKET_COL = "pb"
@@ -111,95 +95,6 @@ def _bucketed(df: DataFrame, key_cols: list[str], n_buckets: int) -> DataFrame:
     )
 
 
-def init_merge_table(
-    df: DataFrame, path: str, key_cols: list[str], n_buckets: int = 16
-) -> None:
-    """Materialize the initial table state, hash-partitioned on the key
-    into ``pb=<bucket>`` directories (the rewrite granularity)."""
-    (
-        _bucketed(df, key_cols, n_buckets)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
-    )
-
-
-def merge_parquet_table(
-    spark: SparkSession,
-    path: str,
-    changes: DataFrame,
-    key_cols: list[str],
-    n_buckets: int = 16,
-    op_col: str = OP_COL,
-) -> None:
-    """MERGE the changeset into the parquet table at ``path``.
-
-    Reads only the hash buckets the changeset touches (the IN filter on
-    the partition column prunes at the source listing), applies the
-    logical merge, and dynamically overwrites exactly those partitions.
-    The touched-bucket list is the one small driver-side value (≤
-    n_buckets ints — a plan parameter, like a partition list).
-
-    Crash contract (explicit — this is the one gap vs a real table
-    format's manifest commit): the dynamic overwrite commits PER
-    PARTITION, so a crash mid-merge can leave some touched ``pb=``
-    buckets merged and others at their pre-merge state. Recovery is
-    idempotent replay: re-applying the SAME changeset converges every
-    bucket to the post-merge state regardless of which subset committed
-    (upserts replace by key, deletes anti-join away whether or not the
-    key is still present, inserts re-land in their own bucket's
-    rewrite). A caller that persists changesets until the merge returns
-    therefore gets effective at-least-once → exactly-state semantics;
-    tests/test_sources_and_ops.py::test_merge_partial_commit_replay
-    simulates a partial commit and replays.
-    """
-    bucketed_changes = _bucketed(changes, key_cols, n_buckets)
-    touched = [
-        r[BUCKET_COL]
-        for r in bucketed_changes.select(BUCKET_COL).distinct().collect()
-    ]
-    if not touched:
-        return
-    base = spark.read.parquet(path).where(F.col(BUCKET_COL).isin(touched))
-    merged = apply_changeset(
-        base.drop(BUCKET_COL),
-        bucketed_changes.drop(BUCKET_COL),
-        key_cols,
-        op_col=op_col,
-    )
-    # dynamic overwrite per-write (NOT session-level — see
-    # streaming/pipeline.run_bucketed_table_sink for why): only the
-    # touched pb partitions are replaced, the rest of the table is
-    # untouched on disk
-    merged_bucketed = _bucketed(merged, key_cols, n_buckets)
-    # dynamic overwrite only rewrites partitions PRESENT in the output:
-    # a changeset that deletes EVERY row of a touched bucket produces no
-    # rows for it, so its stale directory must be dropped explicitly
-    # (found by test_run_merge_upsert_sink_with_seq — a lone key deleted
-    # from its own bucket survived the merge). ≤ n_buckets ints collect,
-    # evaluated BEFORE the write (the lineage reads the pre-merge base;
-    # after the overwrite those files are gone).
-    non_empty = {
-        r[BUCKET_COL]
-        for r in merged_bucketed.select(BUCKET_COL).distinct().collect()
-    }
-    (
-        merged_bucketed
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
-    )
-    for b in set(touched) - non_empty:
-        bucket_dir = os.path.join(path, f"{BUCKET_COL}={b}")
-        if os.path.exists(bucket_dir):
-            shutil.rmtree(bucket_dir)
-
-
-def read_merge_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop(BUCKET_COL)
-
-
 def compact_changeset(
     changes: DataFrame, key_cols: list[str], seq_col: str | None
 ) -> DataFrame:
@@ -232,44 +127,6 @@ def compact_changeset(
             "seq_col or pre-compact the feed"
         )
     return changes
-
-
-def run_merge_upsert_sink(
-    stream_df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    n_buckets: int = 16,
-    op_col: str = OP_COL,
-    seq_col: str | None = None,
-    timeout_sec: int = 300,
-) -> None:
-    """Streaming CDC-apply: each micro-batch MERGEs into the keyed table.
-
-    In-batch per-key compaction keeps last-write-wins before the merge
-    when ``seq_col`` names the feed's ordering column; without one the
-    batch must already be at-most-one-op-per-key (asserted — see
-    ``compact_changeset``), because foreachBatch preserves source order
-    only per partition and an unordered pick would be nondeterministic.
-    """
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        compacted = compact_changeset(batch_df, key_cols, seq_col)
-        merge_parquet_table(
-            batch_df.sparkSession,
-            path,
-            compacted,
-            key_cols,
-            n_buckets=n_buckets,
-            op_col=op_col,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_or_raise(q, timeout_sec, "run_merge_upsert_sink")
 
 
 def diff_snapshots(

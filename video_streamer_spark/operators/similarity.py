@@ -182,36 +182,6 @@ def lsh_plane_rows(
     ]
 
 
-def add_lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    seed: int = LSH_PLANES_SEED,
-) -> DataFrame:
-    """Append an int ``bucket`` column = sign bits against fixed planes.
-
-    Planes are generated driver-side from a fixed seed and folded into
-    the plan as array literals — they reach executors inside the codegen'd
-    expression, no broadcast variable or UDF needed.
-    """
-    planes = _random_planes(dim, n_planes, seed)
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(
-                F.transform(F.col(vec_col), lambda x: x.cast("double")),
-                plane_col,
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket.cast("int"))
-
-
 def add_lsh_tables(
     df: DataFrame,
     dim: int,
@@ -1454,12 +1424,13 @@ def ivf_index_upsert(
     rewrite ONLY the touched ``cell=`` partitions — each rewritten as
     (surviving old rows ANTI-JOIN delta ids) ∪ delta rows, last write
     wins per vec_id. Untouched partitions are never read or written
-    (the merge.py touched-bucket discipline on the index layout).
+    (the table_format touched-bucket discipline on the index layout).
     Returns the touched cell ids (≤ |delta| — a request-sized driver
     list, same class as the merge bucket list).
 
-    Crash contract (the maintenance.py/result_cache stage-and-swap
-    discipline): the merged touched cells are materialized into a
+    Crash contract (stage, then swap per cell — the same discipline as
+    the ``streaming/incremental`` epoch journal): the merged touched
+    cells are materialized into a
     sibling ``.upsert-tmp`` directory FIRST — the live index is never
     read-and-overwritten in one job — then swapped in per cell with two
     renames (``cell=c`` → ``cell=c.old``, staged → ``cell=c``). A crash

@@ -1,8 +1,8 @@
 """A minimal snapshot-versioned table format: ATOMIC multi-bucket
-commits over plain parquet — closing the one documented gap of
-``operators/merge.py`` (its dynamic partition overwrite commits per
-partition, so a crash mid-merge exposes a half-merged table until the
-changeset is replayed).
+commits over plain parquet — the one versioned, keyed table of this
+package. A MERGE applies ``operators/merge.py``'s changeset algebra to
+the touched buckets and publishes them all in one commit, so no reader
+ever sees a half-merged table.
 
 This is the log-of-manifests design real table formats (Delta,
 Iceberg) reduce to, in its smallest honest form:

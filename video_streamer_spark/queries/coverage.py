@@ -767,8 +767,8 @@ def x54_date_spine_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UPDATE (keys %10==0, price × 1.1 in exact decimal), WHEN NOT MATCHED
 # INSERT (fresh keys at +100M), WHEN MATCHED DELETE (keys %13==0) — and
 # the result is rolled up per status so the driver row stays compact.
-# The physical touched-bucket parquet rewrite is tested in
-# tests/test_sources_and_ops.py (idempotence + partition pruning).
+# The physical, atomically committed MERGE is table_format.merge_table
+# (x210 onward).
 @query(
     "x56_merge_upsert_result",
     oracle="""

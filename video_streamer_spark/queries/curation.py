@@ -1739,8 +1739,12 @@ def x79_hierarchy_depth_pointer_jump(
     # construction runs zero jobs (a localCheckpoint variant was
     # measured and rejected: toRdd under AQE materializes every stage
     # at construction — 13 jobs during plan building).
-    from video_streamer_spark.functions.caching import bounded_persist
+    from video_streamer_spark.functions.caching import (
+        bounded_persist,
+        evict_pools,
+    )
 
+    evict_pools("x79-")
     for it in range(5):
         ptr = bounded_persist(ptr, f"x79-r{it}")
         other = ptr.select(

@@ -34,7 +34,3 @@ def write_noop(df: DataFrame) -> None:
     """Discard sink (reference fakesink): full execution, no output —
     for measuring pure compute cost."""
     df.write.format("noop").mode("overwrite").save()
-
-
-def write_console(df: DataFrame, n: int = 20) -> None:
-    df.show(n, truncate=False)

@@ -3,23 +3,17 @@
 The pattern a 100 TB event warehouse uses to keep an aggregate table
 fresh without recomputing it: each micro-batch contributes a PARTIAL
 aggregate row per key to a journal, and readers combine the journal on
-read (or a compaction folds it periodically). Properties that make it
-safe at scale:
+read. Properties that make it safe at scale:
 
 - **Replay idempotence.** Structured Streaming's foreachBatch may replay
   an epoch after a failure. Additive MERGE into the rollup would then
   double-count; journaling partials keyed by ``batch-{epoch_id}`` makes
   a replay rewrite the same rows instead (the same per-epoch discipline
   as ``pipeline.run_foreach_batch_sink`` and the reference's end-of-run
-  flush, gst-detection-tf.py:339-344). Replay stays idempotent ACROSS
-  compaction too: the fold records which epochs it absorbed in a
-  manifest, and a replayed epoch found in the manifest is skipped — its
-  rows (deterministic from the checkpointed source offsets) are already
-  inside the folded partials.
+  flush, gst-detection-tf.py:339-344).
 - **Partial-aggregability.** Journal rows are (n_events, sum_micros)
   in exact BIGINT — combinable in any order/grouping, so the read-side
-  combine is a plain codegen hash agg and a compaction is the identical
-  query writing its output back. This is the same shape Spark's own
+  combine is a plain codegen hash agg. This is the same shape Spark's own
   map-side partial aggregation uses, persisted across time instead of
   across tasks.
 - **Epoch visibility is all-or-nothing.** Epoch dirs are staged under a
@@ -36,7 +30,6 @@ journal is partition-pruned by day like any fact table.
 from __future__ import annotations
 
 import itertools
-import json
 import os
 import shutil
 
@@ -45,32 +38,9 @@ from pyspark.sql import functions as F
 
 from video_streamer_spark.catalog import table
 from video_streamer_spark.functions.parity import round2
-from video_streamer_spark.operators.maintenance import (
-    atomic_swap_dir,
-    heal_swap_residue,
-)
 from video_streamer_spark.streaming.drain import drain_or_raise
 
 _seq = itertools.count()
-
-_MANIFEST = "folded-epochs.json"
-
-
-def _read_manifest(journal: str) -> dict:
-    """``{"epochs": set[int], "scope": str | None}``. The legacy format
-    (a bare JSON list of epoch ids) is read as scope=None."""
-    p = os.path.join(journal, _MANIFEST)
-    if not os.path.exists(p):
-        return {"epochs": set(), "scope": None}
-    with open(p) as fh:
-        data = json.load(fh)
-    if isinstance(data, list):
-        return {"epochs": set(data), "scope": None}
-    return {"epochs": set(data["epochs"]), "scope": data.get("scope")}
-
-
-def _folded_epochs(journal: str) -> set[int]:
-    return _read_manifest(journal)["epochs"]
 
 
 def heal_journal_residue(journal: str) -> None:
@@ -109,47 +79,19 @@ def heal_journal_residue(journal: str) -> None:
                 shutil.rmtree(os.path.join(journal, d))
 
 
-def journal_epoch(
-    partial_df: DataFrame,
-    epoch_id: int,
-    journal: str,
-    scope: str | None = None,
-) -> None:
+def journal_epoch(partial_df: DataFrame, epoch_id: int, journal: str) -> None:
     """Journal ONE micro-batch's partial rows under their epoch id —
     the shared idempotent-write discipline every incremental-view
     writer here uses (event rollup, join-view rollup).
 
     Idempotence: a replayed epoch whose dir still exists is swapped in
-    place with the same rows; a replayed epoch that a compaction already
-    folded (listed in the journal manifest) is SKIPPED — its rows are
-    already inside the folded partials, and re-journaling it would
-    double-count. The epoch is staged under a dot-prefixed temp the
-    ``batch-*`` reader glob never matches and renamed into place, so a
-    concurrent read sees each epoch completely or not at all.
-
-    ``scope`` ties the manifest's folded-epoch ids to ONE stream run
-    (pass the stream's checkpoint location). Epoch ids restart at 0
-    whenever a stream gets a fresh checkpoint, so without the scope a
-    journal that outlives its checkpoint would silently drop the new
-    stream's early epochs (their ids collide with folded ones). A
-    scoped writer hitting a manifest folded under a DIFFERENT scope
-    refuses loudly instead of guessing."""
+    place with the same rows. The epoch is staged under a dot-prefixed
+    temp the ``batch-*`` reader glob never matches and renamed into
+    place, so a concurrent read sees each epoch completely or not at
+    all. Epoch ids restart at 0 whenever a stream gets a fresh
+    checkpoint, so one journal belongs to one checkpoint lineage (each
+    invocation below streams into a fresh run dir)."""
     heal_journal_residue(journal)
-    manifest = _read_manifest(journal)
-    if (
-        scope is not None
-        and manifest["scope"] is not None
-        and manifest["scope"] != scope
-    ):
-        raise RuntimeError(
-            f"journal {journal} was compacted under stream scope "
-            f"{manifest['scope']!r} but this writer has scope {scope!r}: "
-            "epoch ids are only comparable within one checkpoint "
-            "lineage. Use a fresh journal for a fresh checkpoint (or "
-            "compact with the matching scope)."
-        )
-    if int(epoch_id) in manifest["epochs"]:
-        return
     staged = f"{journal}/.staging-batch-{epoch_id}"
     final = f"{journal}/batch-{epoch_id}"
     partial_df.write.mode("overwrite").parquet(staged)
@@ -168,15 +110,10 @@ def journal_epoch(
         os.rename(staged, final)
 
 
-def write_partial_batch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    journal: str,
-    scope: str | None = None,
-) -> None:
+def write_partial_batch(batch_df: DataFrame, epoch_id: int, journal: str) -> None:
     """One micro-batch's contribution to the event rollup: a partial
     aggregate per (day, event_type), journaled via ``journal_epoch``
-    (see it for the idempotence/replay/scope contract)."""
+    (see it for the idempotence/replay contract)."""
     micros = F.floor(F.col("value").cast("double") * 1000000.0).cast("bigint")
     partial = batch_df.groupBy(
         F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
@@ -187,15 +124,14 @@ def write_partial_batch(
         F.count("*").cast("bigint").alias("n_partial"),
         F.sum(micros).cast("bigint").alias("micros_partial"),
     )
-    journal_epoch(partial, epoch_id, journal, scope=scope)
+    journal_epoch(partial, epoch_id, journal)
 
 
 def combine_rollup(spark: SparkSession, journal: str) -> DataFrame:
     """Read-side combine of the partial journal: exact BIGINT sums, then
     the presentation round (parity rules 1/2/4). Heals swap/stage
-    residue from a crashed writer first (same quiesced-writer contract
-    as compaction), so an epoch stranded mid-swap is visible again."""
-    heal_swap_residue(journal)
+    residue from a crashed writer first (writers quiesced), so an epoch
+    stranded mid-swap is visible again."""
     heal_journal_residue(journal)
     parts = spark.read.parquet(f"{journal}/batch-*")
     return (
@@ -213,98 +149,6 @@ def combine_rollup(spark: SparkSession, journal: str) -> DataFrame:
             ),
         )
     )
-
-
-def compact_journal(
-    spark: SparkSession, journal: str, scope: str | None = None
-) -> dict:
-    """Fold all journal epochs into one: read every ``batch-*`` partial,
-    combine per key (partials are order/grouping-invariant BIGINT sums,
-    so the fold IS the same aggregation), and swap the folded journal in
-    atomically (``maintenance.atomic_swap_dir``: two renames +
-    ``heal_swap_residue`` crash recovery). ``combine_rollup`` results
-    are identical before and after — compaction only bounds journal
-    growth (|keys| rows instead of |keys touched| × |epochs|).
-
-    The manifest written alongside the fold lists every epoch id ever
-    absorbed (merged across folds), which is what keeps a post-crash
-    foreachBatch REPLAY of a folded epoch from double-counting (see
-    ``write_partial_batch``).
-
-    Concurrency contract: run with writers QUIESCED (the stream drained
-    or stopped) — the same contract as every offline compactor
-    (maintenance.compact_parquet_dir, Delta OPTIMIZE). As a guard, any
-    epoch dir that appears between the fold's snapshot and the swap —
-    including the window between the carry-over listdir and the swap
-    renames, re-checked AFTER the swap before the old tree is deleted —
-    is carried over into the new journal rather than deleted; a writer
-    mid-stage (.staging-*) during the swap is not supported.
-
-    ``scope`` (the writing stream's checkpoint location) is recorded in
-    the manifest; see ``write_partial_batch`` for why folded epoch ids
-    are only meaningful within one checkpoint lineage."""
-    heal_swap_residue(journal)
-    heal_journal_residue(journal)
-    manifest = _read_manifest(journal)
-    if (
-        scope is not None
-        and manifest["scope"] is not None
-        and manifest["scope"] != scope
-    ):
-        raise RuntimeError(
-            f"journal {journal} already folded under scope "
-            f"{manifest['scope']!r}; refusing to compact under {scope!r}"
-        )
-    epochs = sorted(
-        d for d in os.listdir(journal) if d.startswith("batch-")
-    )
-    if not epochs:
-        return {"epochs_folded": 0}
-    folded_ids = sorted(
-        manifest["epochs"]
-        | {
-            int(d.removeprefix("batch-"))
-            for d in epochs
-            if d != "batch-compacted"
-        }
-    )
-    folded = (
-        spark.read.parquet(*[f"{journal}/{d}" for d in epochs])
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n_partial").cast("bigint").alias("n_partial"),
-            F.sum("micros_partial").cast("bigint").alias("micros_partial"),
-        )
-    )
-    tmp = journal.rstrip("/") + ".compact-tmp"
-    folded.write.mode("overwrite").parquet(f"{tmp}/batch-compacted")
-    with open(os.path.join(tmp, _MANIFEST), "w") as fh:
-        json.dump(
-            {
-                "epochs": folded_ids,
-                "scope": scope if scope is not None else manifest["scope"],
-            },
-            fh,
-        )
-    # carry over epochs journaled after the snapshot (quiesced-writer
-    # contract makes this set empty; the guard keeps a straggler's data)
-    for d in os.listdir(journal):
-        if d.startswith("batch-") and d not in epochs:
-            os.rename(os.path.join(journal, d), os.path.join(tmp, d))
-    # the swap inline (not atomic_swap_dir) so the old tree can be
-    # re-listed AFTER the renames: an epoch journaled between the
-    # carry-over listdir above and the rename lands in `old`, and an
-    # unconditional rmtree there would silently lose it
-    old = journal.rstrip("/") + ".compact-old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(journal, old)
-    os.rename(tmp, journal)
-    for d in os.listdir(old):
-        if d.startswith("batch-") and d not in epochs:
-            os.rename(os.path.join(old, d), os.path.join(journal, d))
-    shutil.rmtree(old)
-    return {"epochs_folded": len(epochs)}
 
 
 def _work_dirs(spark: SparkSession, sf_dir: str, n_splits: int) -> tuple[str, str]:
@@ -352,9 +196,7 @@ def incremental_rollup(
     )
     q = (
         stream.writeStream.foreachBatch(
-            lambda df, epoch: write_partial_batch(
-                df, epoch, journal, scope=checkpoint
-            )
+            lambda df, epoch: write_partial_batch(df, epoch, journal)
         )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
@@ -384,8 +226,8 @@ def incremental_join_rollup(
     (loaded ONCE outside the body and captured by the closure —
     ``plans.advisor.lint_foreach_batch`` flags the per-batch re-read
     this avoids), partial-aggregates to (segment, n, price_micros), and
-    journals via ``journal_epoch`` — so replay idempotence, compaction
-    and crash-healing are inherited, and the maintained view equals the
+    journals via ``journal_epoch`` — so replay idempotence and
+    crash-healing are inherited, and the maintained view equals the
     full join recomputed from scratch (the oracle's form) after ANY
     batch composition.
 
@@ -419,7 +261,7 @@ def incremental_join_rollup(
                 F.sum(micros).cast("bigint").alias("micros_partial"),
             )
         )
-        journal_epoch(partial, epoch_id, journal, scope=checkpoint)
+        journal_epoch(partial, epoch_id, journal)
 
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
@@ -434,7 +276,6 @@ def incremental_join_rollup(
     )
     drain_or_raise(q, timeout_sec, "incremental_join_rollup")
     shutil.rmtree(checkpoint, ignore_errors=True)
-    heal_swap_residue(journal)
     heal_journal_residue(journal)
     parts = spark.read.parquet(f"{journal}/batch-*")
     return (

@@ -10,8 +10,7 @@ standard Structured Streaming exactly-once for this file sink; the
 append itself is NOT idempotent under manual replay (re-running a
 delivered epoch duplicates vectors), which for an ANN index degrades
 results, not correctness of the pipeline — recovery is rebuild
-(`ivf_index_build`) or dedup-compaction by vec_id, the same
-re-converge-by-rerun stance `operators/merge.py` documents.
+(`ivf_index_build`) or dedup-compaction by vec_id.
 """
 
 from __future__ import annotations

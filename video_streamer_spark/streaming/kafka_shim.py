@@ -104,28 +104,6 @@ def kafka_shaped_events(
     return to_kafka_wire(ev, topic=topic, n_partitions=n_partitions)
 
 
-def kafka_shaped_socket(
-    spark: SparkSession, host: str, port: int, topic: str = "socket"
-) -> DataFrame:
-    """Live push-based variant: each socket line is one value payload —
-    the closest in-container analog of a broker subscription."""
-    raw = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    return raw.select(
-        F.lit(None).cast("binary").alias("key"),
-        F.encode(F.col("value"), "UTF-8").alias("value"),
-        F.lit(topic).alias("topic"),
-        F.lit(0).cast("int").alias("partition"),
-        F.monotonically_increasing_id().alias("offset"),
-        F.current_timestamp().alias("timestamp"),
-        F.lit(0).cast("int").alias("timestampType"),
-    )
-
-
 def parse_events_from_kafka(kafka_df: DataFrame) -> DataFrame:
     """Consumer-side decode: wire records → typed events rows. THIS is
     the code that runs unchanged against a real broker."""
