@@ -258,3 +258,80 @@ def test_udf_closures_ship_their_cross_module_references():
         "(external-cwd workers will raise ModuleNotFoundError, "
         "order-dependently):\n" + "\n".join(offenders)
     )
+
+
+DATASOURCE_BASES = {
+    "DataSource",
+    "DataSourceReader",
+    "DataSourceStreamReader",
+    "SimpleDataSourceStreamReader",
+}
+
+
+def _datasource_classes(tree: ast.AST) -> list[ast.ClassDef]:
+    return [
+        n
+        for n in tree.body
+        if isinstance(n, ast.ClassDef)
+        and any(
+            getattr(b, "id", getattr(b, "attr", None)) in DATASOURCE_BASES
+            for b in n.bases
+        )
+    ]
+
+
+def test_datasource_modules_ship_every_in_package_import():
+    """DataSource methods run in Spark's data-source RUNNER process,
+    which cannot import this package for an external-cwd consumer
+    (tests/test_external_cwd.py drives that for real). So a module
+    defining a DataSource / reader class must (a) ship_module every
+    in-package module it imports at module level — the runner then
+    receives it by value — and (b) never import ``video_streamer_spark``
+    inside a method of those classes, where shipping cannot reach."""
+    offenders: list[str] = []
+    for f in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        classes = _datasource_classes(tree)
+        if not classes:
+            continue
+        top_imports = ast.Module(
+            body=[
+                n
+                for n in tree.body
+                if isinstance(n, (ast.Import, ast.ImportFrom))
+            ],
+            type_ignores=[],
+        )
+        binds = _in_pkg_bindings(top_imports)
+        shipped = {
+            binds.get(a)
+            for node in tree.body
+            if isinstance(node, ast.Expr)
+            for a in _ship_args(node)
+        }
+        for mod in sorted(set(binds.values())):
+            if mod.endswith(".functions.shipping") or mod in shipped:
+                continue
+            offenders.append(
+                f"{f}: imports {mod} at module level without "
+                "ship_module'ing it"
+            )
+        for cls in classes:
+            for fn in cls.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                for node in ast.walk(fn):
+                    mods = (
+                        [node.module or ""]
+                        if isinstance(node, ast.ImportFrom)
+                        else [a.name for a in node.names]
+                        if isinstance(node, ast.Import)
+                        else []
+                    )
+                    offenders += [
+                        f"{f}:{node.lineno}: {cls.name}.{fn.name} "
+                        f"imports {m} (runs in the runner process)"
+                        for m in mods
+                        if m.startswith("video_streamer_spark")
+                    ]
+    assert not offenders, "\n".join(offenders)

@@ -34,8 +34,8 @@ AMPLITUDE = 12000
 
 
 def planted_bin(frame_id: int) -> int:
-    """FFT bin (cycles per window) of the planted tone — keep in
-    lockstep with the x203 oracle SQL. Range 5..104 of 128."""
+    """FFT bin (cycles per window) of the planted tone — must match
+    the x203 oracle SQL. Range 5..104 of 128."""
     return 5 + (int(frame_id) * 13) % 100
 
 

@@ -43,11 +43,10 @@ Two implementations ship:
   format is provably correct against any store offering the
   conditional-put primitive.)
 
-Both stores persist entries as plain files at the same paths, so
-everything downstream that reads manifests WITHOUT the package on its
-``sys.path`` (the ``table_cdf`` Python DataSource runs in Spark's
-data-source runner process — see ``sources/cdf_source.py``) keeps
-working against either store.
+Both stores persist entries as plain files at the same paths, so a
+reader WITHOUT a LogStore — the Python DataSources, which run in
+Spark's data-source runner process and read through
+``operators/manifest.load_file`` — works against either store.
 
 Routing: ``log_store_for(path)`` longest-prefix-matches a registry so
 tests (and, at scale, an s3://-prefix) can route one table through a

@@ -40,7 +40,7 @@ KERNEL = np.full((3, 3), 1.0 / 9.0, dtype=np.float64)
 
 def planted_bounds(frame_id: int) -> tuple[int, int, int, int]:
     """(top, left, bottom, right), inclusive, from integer-modular
-    arithmetic — keep in lockstep with the x199 oracle SQL."""
+    arithmetic — must match the x199 oracle SQL."""
     fid = int(frame_id)
     top = 3 + (fid * 7) % 40
     left = 3 + (fid * 11) % 40

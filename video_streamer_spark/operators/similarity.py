@@ -638,6 +638,30 @@ def _routing_scores(mat: np.ndarray, cents: np.ndarray, c2: np.ndarray) -> np.nd
     return c2[None, :] - 2.0 * dots
 
 
+def _cell_router(quantizer):
+    """The IVF cell router: a pandas UDF sending each vector to its
+    argmin routing-score cell under ``quantizer`` (``_pivot_quantizer``'s
+    output). argmin returns the FIRST min and the centroids are
+    cent_id-sorted, so ties break on the smaller centroid id — same as
+    the oracle's ORDER BY score, id."""
+    import sys
+
+    from pyspark.sql.types import LongType
+
+    from video_streamer_spark.functions.shipping import ship_module
+
+    # the UDF closes over _routing_scores: ship this module by value
+    ship_module(sys.modules[__name__])
+    cent_ids, cents, c2 = quantizer
+
+    @F.pandas_udf(LongType())
+    def assign_cell(vs: pd.Series) -> pd.Series:
+        mat = np.array(list(vs), dtype=np.float64)
+        return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
+
+    return assign_cell
+
+
 def ivf_topk_pivots(
     corpus: DataFrame,
     queries: DataFrame,
@@ -678,22 +702,14 @@ def ivf_topk_pivots(
 
     ship_module(sys.modules[__name__])
 
-    cent_ids, cents, c2 = _pivot_quantizer(corpus, n_cells, id_col, vec_col)
-
-    def routing_scores(mat: np.ndarray) -> np.ndarray:
-        return _routing_scores(mat, cents, c2)
-
-    @F.pandas_udf(LongType())
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        mat = np.array(list(vs), dtype=np.float64)
-        # argmin returns the FIRST min; cents are cent_id-sorted, so ties
-        # break on the smaller centroid id — same as ORDER BY score, id
-        return pd.Series(cent_ids[np.argmin(routing_scores(mat), axis=1)])
+    quantizer = _pivot_quantizer(corpus, n_cells, id_col, vec_col)
+    cent_ids, cents, c2 = quantizer
+    assign_cell = _cell_router(quantizer)
 
     @F.pandas_udf(ArrayType(LongType()))
     def probe_cells(vs: pd.Series) -> pd.Series:
         mat = np.array(list(vs), dtype=np.float64)
-        scores = routing_scores(mat)
+        scores = _routing_scores(mat, cents, c2)
         order = np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
         return pd.Series(list(cent_ids[order]))
 
@@ -1119,20 +1135,9 @@ def ivf_index_build(
     (argmin ||e-c||², ties on centroid id), identical to
     `ivf_topk_pivots`. Overwrite is idempotent. Returns n_cells.
     """
-    import sys
-
-    from pyspark.sql.types import LongType
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-
-    cent_ids, cents, c2 = _pivot_quantizer(corpus, n_cells, id_col, vec_col)
-
-    @F.pandas_udf(LongType())
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        mat = np.array(list(vs), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
+    assign_cell = _cell_router(
+        _pivot_quantizer(corpus, n_cells, id_col, vec_col)
+    )
 
     (
         corpus.select(
@@ -1316,20 +1321,9 @@ def ivfpq_index_build(
     encoding the shared `pq_encode` — both deterministic, both
     oracle-reproducible.
     """
-    import sys
-
-    from pyspark.sql.types import LongType
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-
-    cent_ids, cents, c2 = _pivot_quantizer(corpus, n_cells, id_col, vec_col)
-
-    @F.pandas_udf(LongType())
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        mat = np.array(list(vs), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
+    assign_cell = _cell_router(
+        _pivot_quantizer(corpus, n_cells, id_col, vec_col)
+    )
 
     codes = pq_encode(corpus, codebook_pred, n_subspaces, dim, id_col, vec_col)
     cells = corpus.select(
@@ -1441,13 +1435,6 @@ def ivf_index_upsert(
     """
     import os
     import shutil
-    import sys
-
-    from pyspark.sql.types import LongType
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
 
     # crash recovery from a prior interrupted upsert: a cell=c.old dir
     # with no cell=c twin means we died between the two swap renames —
@@ -1466,14 +1453,9 @@ def ivf_index_upsert(
         shutil.rmtree(staging)
 
     spark = corpus_for_quantizer.sparkSession
-    cent_ids, cents, c2 = _pivot_quantizer(
-        corpus_for_quantizer, n_cells, id_col, vec_col
+    assign_cell = _cell_router(
+        _pivot_quantizer(corpus_for_quantizer, n_cells, id_col, vec_col)
     )
-
-    @F.pandas_udf(LongType())
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        mat = np.array(list(vs), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
 
     routed = (
         delta.select(
@@ -1532,19 +1514,9 @@ def assign_cells(
     """(id, cell) assignment under the shared pivot quantizer — the
     building block ivf_index_build/ivfpq_index_build use, exposed for
     index monitoring (cell-balance reports)."""
-    import sys
-
-    from pyspark.sql.types import LongType
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-    cent_ids, cents, c2 = _pivot_quantizer(embeddings, n_cells, id_col, vec_col)
-
-    @F.pandas_udf(LongType())
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        mat = np.array(list(vs), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
+    assign_cell = _cell_router(
+        _pivot_quantizer(embeddings, n_cells, id_col, vec_col)
+    )
 
     return embeddings.select(
         F.col(id_col), assign_cell(F.col(vec_col)).alias("cell")

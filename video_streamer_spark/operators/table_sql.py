@@ -104,6 +104,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark.operators.manifest import parse_timestamp
 from video_streamer_spark.operators.merge import BUCKET_COL, _bucketed
 from video_streamer_spark.operators.table_format import (
     _read_retained_manifest,
@@ -587,23 +588,13 @@ def _merge(
 def _parse_ts(text: str) -> float:
     """'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' (naive = UTC) or a raw unix
     epoch number → epoch seconds."""
-    from datetime import datetime, timezone
-
-    t = text.strip()
     try:
-        return float(t)
-    except ValueError:
-        pass
-    try:
-        dt = datetime.fromisoformat(t)
+        return parse_timestamp(text)
     except ValueError:
         raise TableSqlError(
             f"unparseable timestamp {text!r}: use ISO-8601 "
             "('2026-01-01 12:00:00', naive = UTC) or epoch seconds"
         ) from None
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.timestamp()
 
 
 def _select(

@@ -142,153 +142,13 @@ def _load_all() -> None:
     from video_streamer_spark.queries import extended2  # noqa: F401
 
 
-# The driver hash-checks the FIRST 50 registered queries per round.
-# Since round 7 the order is DERIVED from the evidence, not hand-listed
-# (sample_order.derived_sample_order): latest-red rows first, then
-# never-driver-verified queries, then queries whose source hash changed
-# since their newest green row (verified_hashes.json), then everything
-# else oldest-evidence-first. `_SAMPLE_FIRST` survives only as the
-# fallback when derivation itself fails (e.g. artifacts unreadable) and
-# as a regression baseline for the ordering test.
-_SAMPLE_FIRST = [
-    # 1. r5 red rows + rule-4 hashed-output changes
-    "x92_collocation_pmi",
-    "x95_embedding_dispersion",
-    "x97_chi_square_independence",
-    "x130_time_range_frame",
-    "x135_salted_aggregation",
-    "x165_rake_keywords",
-    "x170_bigram_lm_score",
-    # 2. index-lifecycle code changed this round
-    "x155_ivf_index_search",
-    "x159_ivfpq_index_search",
-    "x164_index_upsert_search",
-    # 2b. guard-digit qdec6 sweep changed these hashed outputs too
-    #     (x121/x161/x167/x170 are already listed above/below)
-    "x62_unigram_logprob",
-    "x108_bm25_ranking",
-    "x109_tfidf_profile_drift",
-    "x192_composite_score_topk",
-    # 3. never-driver-verified tail, oldest first
-    "x119_decode_mp4_stats",
-    "x120_journey_pattern_count",
-    "x121_benford_digit_audit",
-    "x122_group_by_all",
-    "x123_null_safe_join",
-    "x124_audio_window_features",
-    "x125_session_window_native",
-    "x126_spatial_nearest_warehouse",
-    "x127_map_functions",
-    "x128_union_by_name",
-    "x129_decode_quarantine_report",
-    "x131_array_custom_sort",
-    "x132_pii_scrub",
-    "x133_rfm_segmentation",
-    "x134_conversion_latency",
-    "x136_join_cardinality_estimate",
-    "x137_cumulative_distinct_users",
-    "x138_weighted_median",
-    "x139_topn_plus_other",
-    "x140_source_novelty",
-    "x141_share_of_parent",
-    "x142_ngram_decontamination",
-    "x143_repetition_filter",
-    "x144_mixture_rebalance",
-    "x145_semantic_dedup",
-    "x146_canonical_selection",
-    "x147_curation_pipeline_v3",
-    "x148_source_overlap",
-    "x149_hard_negatives",
-    "x150_bpe_pair_counts",
-    "x151_pq_encode",
-    "x152_pq_adc_topk",
-    "x153_bpe_train_merges",
-    "x154_bpe_segment_stats",
-    "x156_coverage_selection",
-    "x157_record_linkage",
-    "x158_mmr_rerank",
-    "x160_ann_recall_eval",
-    "x161_psi_quality_drift",
-    "x162_containment_dedup",
-    "x163_contrastive_triplets",
-    "x166_winnowing_fingerprints",
-    "x167_zipf_fit",
-    "x168_leakage_safe_split",
-    "x169_dedup_impact_report",
-    "x171_doc_stitching",
-    "x172_boilerplate_ngrams",
-    "x173_temperature_mixture",
-    "x174_k_anonymity",
-    "x175_oov_ratio",
-    "x176_generalization_step",
-    "x177_embedding_dim_health",
-    "x178_corpus_health_dashboard",
-    "x179_dim_correlation_topk",
-    "x180_class_separation",
-    "x181_hybrid_rrf",
-    "x182_lsh_recall_eval",
-    "x183_similarity_profile",
-    "x184_scene_changes",
-    "x185_track_segments",
-    "x186_event_peaks",
-    "x187_anomalous_users",
-    "x188_vocab_growth",
-    "x189_sequence_gap_audit",
-    "x190_rag_context_assembly",
-    "x191_filter_overlap_matrix",
-    "x192_composite_score_topk",
-    "x193_source_pareto_segments",
-    "x194_ivf_cell_balance",
-    # 4. everything else, oldest evidence first
-    "x40_range_frame_trailing_sum",
-    "x49_stat_aggregates",
-    "x50_arrays_zip_positions",
-    "x25_left_outer_customer_orders",
-    "x26_full_outer_nation_counts",
-    "x27_cross_join_grid",
-    "x29_setops_all_multiplicity",
-    "x30_pivot_status_by_year",
-    "q01_scan_filter",
-    "q02_agg_pricing_summary",
-    "q03_multijoin_region_counts",
-    "q04_topk_customers",
-    "q05a_semi_customers_with_orders",
-    "q05b_anti_customers_without_orders",
-    "q06_window_rank_top3",
-    "q08_rollup_region_nation",
-    "q09_set_ops",
-    "q10_scalar_functions",
-    "q11_orders_per_year_priority",
-    "q16_exact_dedup_stats",
-    "q17_top_tokens",
-    "q18_cosine_topk",
-    "x01_dedup_keep_first",
-    "x02_dedup_minhash_pairs",
-    "x45_dedup_components",
-    "x03_dedup_simhash_pairs",
-    "x04_dedup_ngram_jaccard",
-    "x06_ann_topk_multi",
-    "x07_ann_lsh_topk",
-    "x08_token_stats",
-    "x09_lang_id",
-    "x10_quality_scores",
-    "x11_fingerprint_dupes",
-    "x12_payload_stats",
-    "x31_sampled_resize_stats",
-    "x32_ivf_topk",
-    "x44_annotate_render",
-    "x46_hash_sample",
-    "x47_stratified_language_cap",
-    "x51_curation_pipeline",
-    "x37_tfidf",
-    "q19a_detections_per_label",
-    "x13_inference_replay",
-    "q19b_detections_per_frame",
-    "x54_date_spine_moving_avg",
-]
-
-
 def _reorder() -> None:
+    """The driver hash-checks the FIRST 50 registered queries per
+    round, so the registry is reordered by the evidence
+    (``sample_order.derived_sample_order``): latest-red rows first,
+    then never-driver-verified queries, then queries whose source hash
+    changed since their newest green row (``verified_hashes.json``),
+    then everything else oldest-evidence-first."""
     try:
         from video_streamer_spark.queries.sample_order import (
             derived_sample_order,
@@ -303,10 +163,10 @@ def _reorder() -> None:
 
         print(
             f"# sample-order derivation failed ({exc!r}); "
-            "falling back to the static _SAMPLE_FIRST order",
+            "keeping registration order",
             file=_sys.stderr,
         )
-        order = _SAMPLE_FIRST
+        return
     head = {n: QUERIES[n] for n in order if n in QUERIES}
     tail = {n: fn for n, fn in QUERIES.items() if n not in head}
     QUERIES.clear()

@@ -159,7 +159,7 @@ def x107_regression_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # x108: BM25 RANKING — the retrieval scoring function every corpus
 # search/curation stack uses. Term frequencies come from the shared
-# whitespace tokenizer (lockstep with operators/text.tokens_col), df
+# whitespace tokenizer (same as operators/text.tokens_col), df
 # and avgdl from one corpus pass; idf = ln((N-df+0.5)/(df+0.5)+1) and
 # the k1/b saturation are evaluated as the SAME double expression on
 # both engines and the final score is ROUND4-quantized. Scale: tf is a

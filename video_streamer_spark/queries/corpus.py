@@ -26,7 +26,7 @@ from video_streamer_spark.queries.curation import (
     _STOPWORDS_SQL,
 )
 
-# Tokenization CTE shared with curation.py's oracles (lockstep with
+# Tokenization CTE shared with curation.py's oracles (must match
 # operators/dedup.tokens_col: split on single space, drop empties).
 _TOKS = """
   toks AS (

@@ -19,7 +19,7 @@ from video_streamer_spark.catalog import table
 from video_streamer_spark.operators import dedup, multimodal, similarity, text
 from video_streamer_spark.queries import query
 
-# ---- shared DuckDB CTE fragments (keep in lockstep with operators/) ------
+# ---- shared DuckDB CTE fragments (must match operators/) ---------------
 
 _TOKS_CTE = """
   toks AS (
@@ -129,7 +129,7 @@ def x01_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_cte() -> str:
-    # lockstep with operators/dedup.minhash_signatures: 56-bit integer
+    # must match operators/dedup.minhash_signatures: 56-bit integer
     # slices of sha256(seed || shingle), 4 independent slices per hash.
     # Ends with the mh_pairs CTE so both x02 and x45 build on it.
     n, rows = dedup.NUM_MINHASH, dedup.MINHASH_BAND_ROWS

@@ -1457,7 +1457,7 @@ def x228_restore_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the overflow rule, the ordering, or a lost document shifts every
 # later sequence id and lands as a value mismatch. Token counts use
 # the corpus-wide tokenizer contract (split on single space, drop
-# empties — lockstep with operators/dedup.tokens_col).
+# empties — the same rule as operators/dedup.tokens_col).
 @query(
     "x229_sequence_packing",
     oracle="""

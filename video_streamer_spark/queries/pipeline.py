@@ -15,8 +15,8 @@ from video_streamer_spark.operators import detections as D
 from video_streamer_spark.queries import query
 from video_streamer_spark.sources.labels import labels
 
-# shared CTE rebuilding the synthetic detections table in DuckDB; keep in
-# lockstep with operators/detections.synthetic_detections
+# shared CTE rebuilding the synthetic detections table in DuckDB; must
+# match operators/detections.synthetic_detections
 _DET_CTE = f"""
   det AS (
     SELECT

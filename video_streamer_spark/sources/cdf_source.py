@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import datetime
 import json
-import os
 import sys
 from collections.abc import Iterator, Sequence
 
@@ -59,8 +58,14 @@ from pyspark.sql.types import (
 )
 
 from video_streamer_spark.functions.shipping import ship_module
+from video_streamer_spark.operators import manifest
 
+# every DataSource method — schema(), streamReader(), partitions(),
+# read() — runs in Spark's Python data-source RUNNER process, which
+# cannot import this package for an external-cwd consumer: both this
+# module and the manifest module it reads through travel by value
 ship_module(sys.modules[__name__])
+ship_module(manifest)
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
@@ -107,136 +112,6 @@ def signed_contribution():
     )
 
 
-# These three helpers DUPLICATE table_format's manifest accessors on
-# purpose: every DataSource method — schema(), streamReader(),
-# partitions(), read() — executes in Spark's Python data-source RUNNER
-# process, which does not have this repo on sys.path when the consumer
-# runs from an external cwd. An import of
-# video_streamer_spark.operators.table_format from any of them raises
-# ModuleNotFoundError there (caught live by the external-cwd verify
-# drive; in-repo tests cannot see it because their cwd is the repo
-# root). ship_module pickles THIS module by value, so everything it
-# needs must be self-contained (stdlib + pandas/pyarrow only). Keep in
-# lockstep with table_format._read_manifest / current_version /
-# changed_buckets_between — tests/test_table_format.py exercises both
-# sides against the same tables.
-
-
-def _load_manifest(path: str, version: int) -> dict:
-    with open(
-        os.path.join(path, "_manifests", f"v{version:09d}.json")
-    ) as fh:
-        return json.load(fh)
-
-
-def _abs_ref(path: str, rel: str) -> str:
-    """Resolve a manifest data ref (keep in lockstep with
-    table_format._abs_ref): table-relative for dirs this table wrote,
-    ABSOLUTE for a shallow clone's source-table refs. Self-contained
-    (stdlib only) — this runs in the DataSource runner process."""
-    return rel if os.path.isabs(rel) else os.path.join(path, rel)
-
-
-def _latest_version(path: str) -> int:
-    mdir = os.path.join(path, "_manifests")
-    versions = [
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no committed version at {path}")
-    return max(versions)
-
-
-def _version_at_timestamp(path: str, ts: float) -> int:
-    """Latest retained version with ``committed_at`` ≤ ts — a local
-    copy of table_format.version_at_timestamp's rule, because this
-    module runs in the DataSource RUNNER process and must stay
-    self-contained (stdlib only; the round-7 verify gotcha)."""
-    mdir = os.path.join(path, "_manifests")
-    versions = sorted(
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-    best = None
-    for v in versions:
-        at = _load_manifest(path, v).get("committed_at")
-        if at is None:
-            raise ValueError(
-                f"version {v} at {path} has no committed_at stamp "
-                "(written before timestamp support): use "
-                "startingVersion instead of startingTimestamp"
-            )
-        if at <= ts:
-            best = v
-    if best is None:
-        raise ValueError(
-            f"no retained version at {path} is as old as timestamp "
-            f"{ts} (oldest retained commit is newer, or was vacuumed)"
-        )
-    return best
-
-
-def _parse_ts_option(text: str) -> float:
-    """ISO-8601 (naive = UTC) or epoch seconds → epoch seconds."""
-    from datetime import datetime, timezone
-
-    t = str(text).strip()
-    try:
-        return float(t)
-    except ValueError:
-        pass
-    dt = datetime.fromisoformat(t)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.timestamp()
-
-
-class _BucketLayoutChanged(Exception):
-    """The window spans a rebucket_table commit (n_buckets varies), so
-    bucket ids are not comparable across it — self-contained twin of
-    ``table_format.BucketLayoutChanged``."""
-
-
-def _changed_buckets_walk(path: str, v_from: int, v_to: int) -> set:
-    """Buckets repointed by at least one NON-layout commit in
-    (v_from, v_to] — self-contained twin of
-    ``table_format.changed_buckets_between`` (see the note above).
-    Raises ``_BucketLayoutChanged`` when ``n_buckets`` varies in the
-    window AND a non-layout commit changed rows: the collected ids
-    would name different key partitions in different manifests. A
-    layout-only window still returns the exact empty set."""
-    cur = {"buckets": {}} if v_from == 0 else _load_manifest(path, v_from)
-    anchor_n = cur.get("n_buckets")
-    varied = False
-    changed: set = set()
-    for v in range(v_from + 1, v_to + 1):
-        nxt = _load_manifest(path, v)
-        if anchor_n is None:
-            anchor_n = nxt.get("n_buckets")
-        elif nxt.get("n_buckets") != anchor_n:
-            varied = True
-        if not nxt.get("layout_only"):
-            for b in set(cur["buckets"]) | set(nxt["buckets"]):
-                if cur["buckets"].get(b) != nxt["buckets"].get(b):
-                    changed.add(b)
-            # delete_keys changes rows without repointing the bucket:
-            # its tombstone list is part of the effective contents
-            ta, tb = cur.get("tombstones", {}), nxt.get("tombstones", {})
-            for b in set(ta) | set(tb):
-                if ta.get(b) != tb.get(b):
-                    changed.add(b)
-        cur = nxt
-    if varied and changed:
-        raise _BucketLayoutChanged(
-            f"n_buckets changed within ({v_from}, {v_to}] alongside "
-            "data commits"
-        )
-    return changed
-
-
 def _converter(dt):
     """Scalar converter from a pandas cell to the declared Spark type —
     outer merges upcast int64 columns with absent rows to float64, so
@@ -273,7 +148,7 @@ def _converter(dt):
 
     # nested payload columns (round-13 VERDICT item 2): cells arrive as
     # exact python values (list / dict / list-of-pairs) because
-    # _arrow_types_mapper lands nested arrow columns in pd.ArrowDtype —
+    # manifest.arrow_types_mapper lands nested arrow columns in pd.ArrowDtype —
     # never the lossy numpy detour that conflates null elements with
     # NaN. Key columns stay atomic (create_table enforces it).
     from pyspark.sql.types import ArrayType, MapType
@@ -344,35 +219,6 @@ def _canon_cell(v):
     return v
 
 
-def _arrow_types_mapper(t):
-    """pyarrow→pandas dtype mapper: integral columns land DIRECTLY in
-    nullable Int* dtypes. Without it, an int64 column that carries any
-    null detours through float64 BEFORE the later Int64 cast can run,
-    and values past 2^53 come back corrupted (verified off-by-7 at
-    10^18) — violating this module's exact-integers guarantee.
-
-    Nested columns land in ``pd.ArrowDtype`` for the same reason:
-    the default numpy detour turns null list elements into NaN and
-    struct cells into opaque numpy records; ArrowDtype cells surface
-    as exact python lists/dicts with null preserved."""
-    import pandas as pd
-    import pyarrow as pa
-
-    if (
-        pa.types.is_list(t)
-        or pa.types.is_large_list(t)
-        or pa.types.is_struct(t)
-        or pa.types.is_map(t)
-    ):
-        return pd.ArrowDtype(t)
-    return {
-        pa.int8(): pd.Int8Dtype(),
-        pa.int16(): pd.Int16Dtype(),
-        pa.int32(): pd.Int32Dtype(),
-        pa.int64(): pd.Int64Dtype(),
-    }.get(t)
-
-
 class _CdfPartition(InputPartition):
     """One diff unit: the old-side dirs vs the new-side dirs of a key
     population. Normal windows emit one partition per rewritten bucket
@@ -431,13 +277,13 @@ class _CdfStreamReader(DataSourceStreamReader):
         return {"v": self.start_version}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        return {"v": _latest_version(self.path)}
+        return {"v": manifest.latest_file_version(self.path)}
 
     def partitions(  # noqa: N802
         self, start: dict, end: dict
     ) -> Sequence[InputPartition]:
         try:
-            doc_b = _load_manifest(self.path, end["v"])
+            doc_b = manifest.load_file(self.path, end["v"])
         except FileNotFoundError as exc:
             # a restarted stream REPLAYS its last WAL'd batch before
             # planning new ones — if vacuum dropped that batch's end
@@ -498,20 +344,13 @@ class _CdfStreamReader(DataSourceStreamReader):
                 json.loads(doc_b["schema"])
             ).fields
         }
-        # declared-can-represent-current map (lockstep with
-        # table_format._SAFE_WIDENINGS; self-contained — runner rule)
-        safe_wide = {
-            "tinyint": {"smallint", "int", "bigint"},
-            "smallint": {"int", "bigint"},
-            "int": {"bigint"},
-            "float": {"double"},
-        }
         retyped = sorted(
             n
             for n, cur in current_types.items()
             if n in declared_types
             and declared_types[n] != cur
-            and declared_types[n] not in safe_wide.get(cur, set())
+            and declared_types[n]
+            not in manifest.SAFE_WIDENINGS.get(cur, set())
         )
         if retyped:
             raise RuntimeError(
@@ -523,7 +362,7 @@ class _CdfStreamReader(DataSourceStreamReader):
             doc_a = (
                 None
                 if start["v"] == 0
-                else _load_manifest(self.path, start["v"])
+                else manifest.load_file(self.path, start["v"])
             )
         except FileNotFoundError as exc:
             # the checkpointed start offset's manifest was vacuumed out
@@ -542,25 +381,21 @@ class _CdfStreamReader(DataSourceStreamReader):
         buckets_b = doc_b["buckets"]
         tombs_a = {} if doc_a is None else doc_a.get("tombstones", {})
         tombs_b = doc_b.get("tombstones", {})
-        candidates = {
-            b
-            for b in set(buckets_a) | set(buckets_b) | set(tombs_a)
-            | set(tombs_b)
-            # immutable dir, same pointer AND same tombstone list → no
-            # changed effective row
-            if buckets_a.get(b) != buckets_b.get(b)
-            or tombs_a.get(b) != tombs_b.get(b)
-        }
+        # immutable dir, same pointer AND same tombstone list → no
+        # changed effective row
+        candidates = manifest.buckets_changed_between(doc_a or {}, doc_b)
         try:
             # skip buckets repointed only by layout_only (OPTIMIZE /
             # rebucket) commits — identical rows, and diffing them
             # would turn a table-wide rewrite into a table-wide diff
             # for every CDC consumer. A rebucket-only window returns
             # the exact empty set here → zero partitions, zero reads.
-            candidates &= _changed_buckets_walk(
-                self.path, start["v"], end["v"]
+            candidates &= manifest.changed_buckets_between(
+                lambda v: manifest.load_file(self.path, v),
+                start["v"],
+                end["v"],
             )
-        except (FileNotFoundError, _BucketLayoutChanged):
+        except (FileNotFoundError, manifest.BucketLayoutChanged):
             # vacuumed chain, or the window mixes a rebucket with data
             # commits. Per-bucket endpoint pairing stays exact as long
             # as both ENDPOINTS share one layout (same n_buckets →
@@ -578,21 +413,21 @@ class _CdfStreamReader(DataSourceStreamReader):
                 return [
                     _CdfPartition(
                         [
-                            _abs_ref(self.path, d)
+                            manifest.abs_ref(self.path, d)
                             for d in buckets_a.values()
                         ],
                         [
-                            _abs_ref(self.path, d)
+                            manifest.abs_ref(self.path, d)
                             for d in buckets_b.values()
                         ],
                         end["v"],
                         old_tombs=[
-                            _abs_ref(self.path, r)
+                            manifest.abs_ref(self.path, r)
                             for refs in tombs_a.values()
                             for r in refs
                         ],
                         new_tombs=[
-                            _abs_ref(self.path, r)
+                            manifest.abs_ref(self.path, r)
                             for refs in tombs_b.values()
                             for r in refs
                         ],
@@ -601,19 +436,19 @@ class _CdfStreamReader(DataSourceStreamReader):
                 ]
         return [
             _CdfPartition(
-                [_abs_ref(self.path, buckets_a[b])]
+                [manifest.abs_ref(self.path, buckets_a[b])]
                 if b in buckets_a
                 else [],
-                [_abs_ref(self.path, buckets_b[b])]
+                [manifest.abs_ref(self.path, buckets_b[b])]
                 if b in buckets_b
                 else [],
                 end["v"],
                 old_tombs=[
-                    _abs_ref(self.path, r)
+                    manifest.abs_ref(self.path, r)
                     for r in tombs_a.get(b, [])
                 ],
                 new_tombs=[
-                    _abs_ref(self.path, r)
+                    manifest.abs_ref(self.path, r)
                     for r in tombs_b.get(b, [])
                 ],
                 mapping=doc_b.get("column_mapping"),
@@ -645,7 +480,7 @@ class _CdfStreamReader(DataSourceStreamReader):
                 # nullable Int* — never the lossy float64 detour a
                 # null-bearing int64 column would otherwise take
                 df = pq.read_table(d).to_pandas(
-                    types_mapper=_arrow_types_mapper
+                    types_mapper=manifest.arrow_types_mapper
                 )
                 if back:
                     # field-id mapping: a pre-drop file may carry dead
@@ -671,31 +506,11 @@ class _CdfStreamReader(DataSourceStreamReader):
             # so the outer merge keeps integral semantics end to end
             for c in int_cols:
                 df[c] = df[c].astype("Int64")
-            if tomb_dirs and len(df):
-                # merge-on-read deletes: this side's effective rows are
-                # its dirs minus its manifest's tombstoned keys (same
-                # anti-join the batch readers apply). dropna on the
-                # dead keys: pandas merges MATCH NA==NA where Spark's
-                # equality never does — a null tombstone key must kill
-                # nothing and a null-keyed data row must survive, like
-                # the batch anti-join (review r8)
-                dead = pd.concat(
-                    [
-                        pq.read_table(d).to_pandas(
-                            types_mapper=_arrow_types_mapper
-                        )[key_cols]
-                        for d in tomb_dirs
-                    ],
-                    ignore_index=True,
-                ).drop_duplicates().dropna(subset=key_cols)
-                for c in key_cols:
-                    if c in int_cols:
-                        dead[c] = dead[c].astype("Int64")
-                marked = df[key_cols].merge(
-                    dead, on=key_cols, how="left", indicator=True
-                )
-                df = df[(marked["_merge"] == "left_only").to_numpy()]
-            return df[names]
+            # merge-on-read deletes: this side's effective rows are its
+            # dirs minus its manifest's tombstoned keys (same anti-join
+            # the batch readers apply)
+            keep = manifest.tombstone_keep_mask(df, tomb_dirs, key_cols)
+            return df[keep][names]
 
         def emit_frame(df, cols, change):
             for row in df[cols].itertuples(index=False, name=None):
@@ -718,23 +533,8 @@ class _CdfStreamReader(DataSourceStreamReader):
             eff = load(partition.old_dirs, partition.old_tombs)
             if not delta or not len(eff):
                 return
-            dead = pd.concat(
-                [
-                    pq.read_table(d).to_pandas(
-                        types_mapper=_arrow_types_mapper
-                    )[key_cols]
-                    for d in delta
-                ],
-                ignore_index=True,
-            ).drop_duplicates().dropna(subset=key_cols)
-            for c in key_cols:
-                if c in int_cols:
-                    dead[c] = dead[c].astype("Int64")
-            marked = eff[key_cols].merge(
-                dead, on=key_cols, how="left", indicator=True
-            )
             yield from emit_frame(
-                eff[(marked["_merge"] == "both").to_numpy()],
+                eff[~manifest.tombstone_keep_mask(eff, delta, key_cols)],
                 names,
                 "delete",
             )
@@ -846,9 +646,8 @@ class TableCdfDataSource(DataSource):
         return "table_cdf"
 
     def schema(self) -> StructType:
-        doc = _load_manifest(
-            self.options["path"], _latest_version(self.options["path"])
-        )
+        path = self.options["path"]
+        doc = manifest.load_file(path, manifest.latest_file_version(path))
         table_schema = StructType.fromJson(json.loads(doc["schema"]))
         return StructType(
             list(table_schema.fields)
@@ -871,11 +670,17 @@ class TableCdfDataSource(DataSource):
             # the stream's first window begins AFTER the latest commit
             # at-or-before the timestamp — "resume from where the
             # table stood at time ts"
-            start = _version_at_timestamp(path, _parse_ts_option(raw_ts))
+            start = manifest.version_at_timestamp(
+                path,
+                manifest.file_versions(path),
+                lambda v: manifest.load_file(path, v),
+                manifest.parse_timestamp(raw_ts),
+                "use startingVersion instead of startingTimestamp",
+            )
         else:
             raw = self.options.get("startingVersion", 0)
             start = (
-                _latest_version(path)
+                manifest.latest_file_version(path)
                 if isinstance(raw, str) and raw.strip().lower() == "latest"
                 else int(raw)
             )
@@ -884,7 +689,7 @@ class TableCdfDataSource(DataSource):
             == "true"
         )
         reader = _CdfStreamReader(path, schema, start, preimages=preimages)
-        doc = _load_manifest(path, _latest_version(path))
+        doc = manifest.load_file(path, manifest.latest_file_version(path))
         reader.key_cols = doc["key_cols"]
         return reader
 
@@ -924,7 +729,7 @@ def replicate_table(
         run_acid_merge_sink,
     )
 
-    dst_keys = _load_manifest(dst_path, current_version(dst_path))[
+    dst_keys = manifest.load_file(dst_path, current_version(dst_path))[
         "key_cols"
     ]
     feed = (

@@ -43,7 +43,6 @@ gst-detection-tf.py:339-344) has no versioned reads at all.
 from __future__ import annotations
 
 import json
-import os
 import sys
 from collections.abc import Iterator, Sequence
 
@@ -55,87 +54,25 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from video_streamer_spark.functions.shipping import ship_module
+from video_streamer_spark.operators import manifest
 
+# every DataSource method runs in Spark's Python data-source RUNNER
+# process, which cannot import this package for an external-cwd
+# consumer: both this module and the manifest module it reads through
+# travel by value
 ship_module(sys.modules[__name__])
+ship_module(manifest)
 
 
-# These helpers DUPLICATE table_format's manifest accessors on purpose
-# — same rule as sources/cdf_source.py: every DataSource method runs in
-# Spark's Python data-source RUNNER process, which does not have this
-# repo on sys.path for external-cwd consumers, so this module must be
-# self-contained (stdlib + pandas/pyarrow only). Keep in lockstep with
-# table_format._read_manifest / current_version / version_at_timestamp.
-
-
-def _load_manifest(path: str, version: int) -> dict:
-    mf = os.path.join(path, "_manifests", f"v{version:09d}.json")
+def _retained_manifest(path: str, version: int) -> dict:
     try:
-        with open(mf) as fh:
-            return json.load(fh)
+        return manifest.load_file(path, version)
     except FileNotFoundError:
         raise ValueError(
             f"version {version} at {path} is not retained (never "
             "committed, or removed by vacuum) — pick a version listed "
             "by DESCRIBE HISTORY"
         ) from None
-
-
-def _latest_version(path: str) -> int:
-    mdir = os.path.join(path, "_manifests")
-    versions = [
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no committed version at {path}")
-    return max(versions)
-
-
-def _version_at_timestamp(path: str, ts: float) -> int:
-    mdir = os.path.join(path, "_manifests")
-    versions = sorted(
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-    best = None
-    for v in versions:
-        at = _load_manifest(path, v).get("committed_at")
-        if at is None:
-            raise ValueError(
-                f"version {v} at {path} has no committed_at stamp "
-                "(written before timestamp support): use the version "
-                "option instead of timestamp"
-            )
-        if at <= ts:
-            best = v
-    if best is None:
-        raise ValueError(
-            f"no retained version at {path} is as old as timestamp "
-            f"{ts} (oldest retained commit is newer, or was vacuumed)"
-        )
-    return best
-
-
-def _parse_ts_option(text: str) -> float:
-    from datetime import datetime, timezone
-
-    t = str(text).strip()
-    try:
-        return float(t)
-    except ValueError:
-        pass
-    dt = datetime.fromisoformat(t)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.timestamp()
-
-
-def _abs_ref(path: str, rel: str) -> str:
-    """Table-relative for dirs this table wrote, ABSOLUTE for a shallow
-    clone's source-table refs (lockstep with table_format._abs_ref)."""
-    return rel if os.path.isabs(rel) else os.path.join(path, rel)
 
 
 def _resolve_version(path: str, options: dict) -> int:
@@ -147,10 +84,16 @@ def _resolve_version(path: str, options: dict) -> int:
             "pin the snapshot"
         )
     if raw_ts is not None:
-        return _version_at_timestamp(path, _parse_ts_option(raw_ts))
+        return manifest.version_at_timestamp(
+            path,
+            manifest.file_versions(path),
+            lambda v: _retained_manifest(path, v),
+            manifest.parse_timestamp(raw_ts),
+            "use the version option instead of timestamp",
+        )
     if raw_v is not None:
         return int(raw_v)
-    return _latest_version(path)
+    return manifest.latest_file_version(path)
 
 
 def _arrow_type(dt):
@@ -221,7 +164,7 @@ class _SnapshotReader(DataSourceReader):
         self.path = path
         self.fields = list(schema.fields)
         self.version = version
-        doc = _load_manifest(path, version)
+        doc = _retained_manifest(path, version)
         self.key_cols = doc["key_cols"]
         self._doc = doc
 
@@ -231,8 +174,8 @@ class _SnapshotReader(DataSourceReader):
         tombs = doc.get("tombstones", {})
         return [
             _SnapshotPartition(
-                [_abs_ref(self.path, d)],
-                [_abs_ref(self.path, r) for r in tombs.get(b, [])],
+                [manifest.abs_ref(self.path, d)],
+                [manifest.abs_ref(self.path, r) for r in tombs.get(b, [])],
                 mapping,
             )
             for b, d in doc["buckets"].items()
@@ -275,48 +218,21 @@ class _SnapshotReader(DataSourceReader):
         rows = pa.concat_tables(frames)
         if partition.tombs and len(rows):
             # merge-on-read deletes: the keep-mask is computed from the
-            # KEY columns only (pandas anti-join — null tombstone keys
-            # kill nothing, null-keyed data rows survive) and applied
-            # to the Arrow table directly. Round-tripping the whole
-            # bucket through pandas would coerce genuine NaN payload
-            # values to NULL and choke on nested columns (ADVICE r13).
+            # KEY columns only and applied to the Arrow table directly.
+            # Round-tripping the whole bucket through pandas would
+            # coerce genuine NaN payload values to NULL and choke on
+            # nested columns (ADVICE r13).
             keys = rows.select(self.key_cols).to_pandas(
-                types_mapper=_pd_types_mapper
+                types_mapper=manifest.arrow_types_mapper
             )
-            dead_tables = [pq.read_table(d) for d in partition.tombs]
-            dead = (
-                pa.concat_tables(
-                    [t.select(self.key_cols) for t in dead_tables]
-                )
-                .to_pandas(types_mapper=_pd_types_mapper)
-                .drop_duplicates()
-                .dropna(subset=self.key_cols)
-            )
-            if len(dead):
-                marked = keys.merge(
-                    dead, on=self.key_cols, how="left", indicator=True
-                )
-                rows = rows.filter(
-                    pa.array(
-                        (marked["_merge"] == "left_only").to_numpy()
+            rows = rows.filter(
+                pa.array(
+                    manifest.tombstone_keep_mask(
+                        keys, partition.tombs, self.key_cols
                     )
                 )
+            )
         yield from rows.to_batches(max_chunksize=1 << 16)
-
-
-def _pd_types_mapper(t):
-    """pyarrow→pandas dtype mapper for the tombstone anti-join path:
-    integral columns land in nullable Int* dtypes, never the lossy
-    float64 detour (same exact-integers rule as the CDF source)."""
-    import pandas as pd
-    import pyarrow as pa
-
-    return {
-        pa.int8(): pd.Int8Dtype(),
-        pa.int16(): pd.Int16Dtype(),
-        pa.int32(): pd.Int32Dtype(),
-        pa.int64(): pd.Int64Dtype(),
-    }.get(t)
 
 
 class TableSnapshotDataSource(DataSource):
@@ -343,7 +259,7 @@ class TableSnapshotDataSource(DataSource):
         return v
 
     def schema(self) -> StructType:
-        doc = _load_manifest(self.options["path"], self._pinned())
+        doc = _retained_manifest(self.options["path"], self._pinned())
         return StructType.fromJson(json.loads(doc["schema"]))
 
     def reader(self, schema: StructType) -> DataSourceReader:

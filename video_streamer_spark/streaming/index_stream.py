@@ -15,29 +15,15 @@ results, not correctness of the pipeline — recovery is rebuild
 
 from __future__ import annotations
 
-import sys
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from video_streamer_spark.functions.shipping import ship_module
-from video_streamer_spark.streaming.drain import drain_or_raise
-from video_streamer_spark.operators import similarity as _sim
 from video_streamer_spark.operators.similarity import (
+    _cell_router,
     _pivot_quantizer,
-    _routing_scores,
+    ivf_index_upsert,
 )
-
-ship_module(sys.modules[__name__])
-# assign_cell (worker-side) closes over _routing_scores, which
-# cloudpickle serializes BY REFERENCE to operators.similarity unless
-# that module is registered too — external-cwd workers then die with
-# ModuleNotFoundError, but only when no earlier query in the process
-# shipped similarity first (the r13 x44 bug class, caught by audit)
-ship_module(_sim)
+from video_streamer_spark.streaming.drain import drain_or_raise
 
 
 def index_ingest_stream(
@@ -54,14 +40,9 @@ def index_ingest_stream(
     ``path`` (availableNow, EOS semantics). The quantizer is pinned
     from ``quantizer_corpus`` ONCE at start — cells must not drift
     between micro-batches or between stream and batch builds."""
-    cent_ids, cents, c2 = _pivot_quantizer(
-        quantizer_corpus, n_cells, id_col, vec_col
+    assign_cell = _cell_router(
+        _pivot_quantizer(quantizer_corpus, n_cells, id_col, vec_col)
     )
-
-    @F.pandas_udf(LongType())
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        mat = np.array(list(vs), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
 
     routed = vec_stream.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
@@ -96,7 +77,6 @@ def index_upsert_stream(
     Quantizer pinned once at start; availableNow EOS semantics; replay
     of a delivered epoch CONVERGES (upsert is idempotent), unlike the
     append ingest."""
-    from video_streamer_spark.operators.similarity import ivf_index_upsert
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
