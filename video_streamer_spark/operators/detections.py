@@ -98,68 +98,6 @@ def per_frame_counts(det: DataFrame) -> DataFrame:
     return det.groupBy("frame_id").agg(F.expr("count(*) AS n_boxes"))
 
 
-def nms(
-    det: DataFrame,
-    iou_threshold: float = 0.5,
-    frame_col: str = "frame_id",
-    class_aware: bool = True,
-) -> DataFrame:
-    """Per-frame greedy non-max suppression over pixel boxes.
-
-    The reference has no NMS operator ("NMS done in HR model",
-    gst-detection-tf.py:295); a metadata pipeline consuming raw model
-    output needs one. Greedy NMS is inherently sequential WITHIN a frame
-    (each kept box suppresses later candidates), so the right Spark
-    shape is applyInPandas grouped by frame: one shuffle on frame_id,
-    then a vectorized IoU loop per group — frames are independent, so
-    parallelism scales with frame count, and per-frame box counts are
-    small by construction.
-    """
-    import sys
-
-    import numpy as np
-    import pandas as pd
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-
-    out_schema = det.schema
-
-    def suppress(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = pdf.sort_values(
-            ["score", "box_idx"], ascending=[False, True]
-        ).reset_index(drop=True)
-        x1 = order["x_min"].to_numpy(dtype=np.float64)
-        y1 = order["y_min"].to_numpy(dtype=np.float64)
-        x2 = order["x_max"].to_numpy(dtype=np.float64)
-        y2 = order["y_max"].to_numpy(dtype=np.float64)
-        area = np.maximum(0, x2 - x1) * np.maximum(0, y2 - y1)
-        classes = order["label_id"].to_numpy()
-        keep, alive = [], np.ones(len(order), dtype=bool)
-        for i in range(len(order)):
-            if not alive[i]:
-                continue
-            keep.append(i)
-            later = np.arange(i + 1, len(order))
-            if later.size == 0:
-                break
-            ix1 = np.maximum(x1[i], x1[later])
-            iy1 = np.maximum(y1[i], y1[later])
-            ix2 = np.minimum(x2[i], x2[later])
-            iy2 = np.minimum(y2[i], y2[later])
-            inter = np.maximum(0, ix2 - ix1) * np.maximum(0, iy2 - iy1)
-            union = area[i] + area[later] - inter
-            iou = np.where(union > 0, inter / union, 0.0)
-            kill = iou > iou_threshold
-            if class_aware:
-                kill &= classes[later] == classes[i]
-            alive[later[kill]] = False
-        return order.iloc[keep][[f.name for f in out_schema.fields]]
-
-    return det.groupBy(frame_col).applyInPandas(suppress, out_schema)
-
-
 def annotate_frames(
     frames: DataFrame,
     det: DataFrame,

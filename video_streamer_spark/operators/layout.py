@@ -10,14 +10,15 @@ this is the difference between "point lookups only work on the sort
 key" and "every indexed dimension prunes".
 
 The z-value is a pure codegen expression (shifts/masks, no UDF), so it
-costs one projection; the layout write is one range-repartition + sort.
+costs one projection; ``table_format.optimize_table(zorder_by=...)``
+does the layout write (one range-repartition + sort).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -38,25 +39,3 @@ def zorder_value(a: Column, b: Column, bits: int = 10) -> Column:
             )
         )
     return reduce(lambda x, y: x.bitwiseOR(y), parts).alias("zval")
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 16,
-    bits: int = 10,
-) -> None:
-    """Rewrite ``df`` as ``n_files`` parquet files clustered on the
-    z-curve of (col_a, col_b): range-repartition on the z-value (files
-    tile the curve) and sort within partitions (rows tile row groups).
-    Readers prune on the per-file min/max of BOTH columns."""
-    (
-        df.withColumn("__z", zorder_value(F.col(col_a), F.col(col_b), bits))
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

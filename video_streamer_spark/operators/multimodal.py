@@ -647,84 +647,6 @@ def decode_frames_detail(
     )
 
 
-N_HIST_BINS = 16
-
-
-def byte_histogram_features(
-    frames: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """Feature extraction stub with real plumbing: 16-bin normalized
-    byte-value histogram per payload as array<double> — a drop-in for a
-    CNN embedding head. Arrow-batched mapInPandas; numpy bincount per
-    record; output feeds the similarity operators unchanged."""
-    import sys
-
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-    ship_module(_jpeg_dep)
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("embedding", ArrayType(DoubleType())),
-        ]
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[bin_col]:
-                a = decode_raw(b)
-                h = np.bincount(a >> 4, minlength=N_HIST_BINS).astype(np.float64)
-                total = h.sum()
-                feats.append((h / total if total else h).tolist())
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), "embedding": feats}
-            )
-
-    return frames.select(id_col, bin_col).mapInPandas(compute, out_schema)
-
-
-def payload_stats_arrow(
-    frames: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """mapInArrow twin of ``payload_stats``: operates directly on Arrow
-    RecordBatches (no pandas materialization). For wide binary payloads
-    this skips a columnar→pandas→columnar round-trip per batch — the
-    lowest-overhead Python boundary Spark offers; semantics are
-    identical to the pandas path (asserted in tests).
-    """
-    import sys
-
-    import pyarrow as pa
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-    ship_module(_jpeg_dep)
-
-    def compute(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            payloads = batch.column(1).to_pylist()
-            arrays = [decode_raw(b) for b in payloads]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, type=pa.int64()),
-                    pa.array([int(a.size) for a in arrays], type=pa.int64()),
-                    pa.array([int(a.sum()) for a in arrays], type=pa.int64()),
-                    pa.array([int(a.size % 640) for a in arrays], type=pa.int32()),
-                    pa.array([int(a.size // 640) for a in arrays], type=pa.int32()),
-                ],
-                names=["doc_id", "n_bytes", "byte_sum", "width", "height"],
-            )
-
-    return frames.select(id_col, bin_col).mapInArrow(compute, PAYLOAD_SCHEMA)
-
-
 def decode_wav(payload: bytes) -> dict:
     """REAL decoder for RIFF/WAVE PCM — the AUDIO modality on the true
     decode path (third container format after PPM and BMP). Pure-python

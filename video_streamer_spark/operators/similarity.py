@@ -102,8 +102,8 @@ def brute_topk(
     query side must fit in one broadcast. ``max_query_rows`` is the
     guard (same foot-gun class as ``embedding_near_pairs``'s
     ``max_exact_rows``, r10 verdict hygiene item 1): above it this
-    refuses with a pointer to the ANN family (``ivf_topk`` /
-    ``ivfpq_topk``) — a large query set against a large corpus is a
+    refuses with a pointer to the ANN family (``ivf_topk_pivots`` /
+    ``ivfpq_index_search``) — a large query set against a large corpus is a
     similarity JOIN, not a broadcast scan — or pass
     ``max_query_rows=None`` to own the cost explicitly."""
     n_q = (
@@ -117,8 +117,8 @@ def brute_topk(
             f"query rows exceeds the max_query_rows={max_query_rows:,} "
             "guard (compare work is |corpus| x |queries| and the "
             "broadcast must fit in executor memory). Use the ANN "
-            "paths (ivf_topk / ivfpq_topk) for large query sets, or "
-            "pass max_query_rows=None to accept the cost."
+            "paths (ivf_topk_pivots / ivfpq_index_search) for large "
+            "query sets, or pass max_query_rows=None to accept the cost."
         )
     # ONE spark.sql pass (r14): the layered construction re-ran the
     # analyzer over the HOF norm/dot trees once per Dataset layer; a
@@ -341,8 +341,7 @@ def embedding_near_pairs(
     ``semantic_dedup_by_cluster`` (SemDeDup), because at 100× the rows
     the exact path is 10,000× the work and no plan lint can see it.
     Pass ``max_exact_rows=None`` to explicitly accept the quadratic
-    cost. ``embedding_near_pairs_sql`` is the pure-DataFrame form of
-    the same math for the no-Python-workers case.
+    cost.
     """
     import sys
 
@@ -497,110 +496,6 @@ def embedding_near_pairs(
     )
 
 
-def embedding_near_pairs_sql(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Pure-DataFrame all-pairs variant (JVM fold) — same math and same
-    results as embedding_near_pairs; kept as the no-Python-workers path.
-    """
-    a = _prepped(embeddings, id_col, vec_col, "a")
-    b = _prepped(embeddings, id_col, vec_col, "b")
-    # dot/(na*nb), NOT pre-normalized vectors: keeps the float op
-    # sequence identical to the DuckDB oracle so the >= threshold cut
-    # can't flip on rounding differences
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select(
-            F.col("a_id").alias("vec_a"),
-            F.col("b_id").alias("vec_b"),
-            (_dot("a_vec", "b_vec") / (F.col("a_norm") * F.col("b_norm"))).alias(
-                "sim_raw"
-            ),
-        )
-        .where(F.col("sim_raw") >= threshold)
-        .select("vec_a", "vec_b", round4("sim_raw").alias("sim"))
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = LSH_PLANES_SEED,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: the coarse-quantizer scale
-    path next to ``lsh_topk``.
-
-    Build: KMeans (fixed seed) partitions the corpus into ``n_cells``
-    Voronoi cells; each vector is stored under its cell id — at 100 TB
-    the corpus lives parquet-partitioned by cell, so a probe reads only
-    n_probe/n_cells of the data (partition pruning does the work).
-    Search: each query routes to its ``n_probe`` nearest centroids
-    (centroids are tiny — they ride driver-side into a vectorized pandas
-    UDF), then scores exactly within those cells via the same rounded
-    cosine as ``brute_topk``. Recall is property-tested, not
-    oracle-exact, like every approximate operator here.
-    """
-    import sys
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    from video_streamer_spark.functions.shipping import ship_module
-
-    ship_module(sys.modules[__name__])
-
-    vecs = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("c_vec"),
-    )
-    km = KMeans(k=n_cells, seed=seed, maxIter=10, featuresCol="__feat",
-                predictionCol="cell")
-    model = km.fit(vecs.withColumn("__feat", array_to_vector("c_vec")))
-    assigned = (
-        model.transform(vecs.withColumn("__feat", array_to_vector("c_vec")))
-        .select("vec_id", "c_vec", F.col("cell").cast("int").alias("cell"))
-    )
-    centers = np.array([np.asarray(c) for c in model.clusterCenters()])
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        out = []
-        for v in vs:
-            d = ((centers - np.asarray(v, dtype=np.float64)) ** 2).sum(axis=1)
-            out.append(np.argsort(d, kind="stable")[:n_probe].astype("int32").tolist())
-        return pd.Series(out)
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("q_vec"),
-    ).withColumn("cell", F.explode(probe_cells(F.col("q_vec"))))
-
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            round4(cosine_similarity("c_vec", "q_vec")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
-
-
 def _pivot_quantizer(corpus, n_cells, id_col="vec_id", vec_col="embedding"):
     """Hash-sampled pivot coarse quantizer shared by the IVF operators:
     centroids are the ``n_cells`` corpus rows with the smallest
@@ -672,7 +567,8 @@ def ivf_topk_pivots(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k with a hash-sampled PIVOT coarse quantizer —
-    the deterministic, oracle-checkable sibling of ``ivf_topk`` (KMeans).
+    deterministic and oracle-checkable (KMeans is not cross-engine
+    reproducible).
 
     Build: centroids are the embeddings of the ``n_cells`` corpus rows
     with the smallest (md5(id), id) — a uniform hash-sample of the

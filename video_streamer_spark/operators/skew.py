@@ -1,20 +1,13 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew mitigation: salted joins.
 
 AQE's skew-join splitting (enabled in session.py) handles most runtime
-skew; these operators are the explicit form for the two cases AQE can't
-fix:
-
-- **low-cardinality aggregation**: grouping 10^9 rows by a 5-value key
-  gives 5 reduce tasks no matter how many executors exist. Salting runs
-  a partial aggregate on (key, salt) — n_salts × |keys| tasks — then a
-  cheap final combine on key. Correct for any algebraic aggregate
-  (sum/count/min/max); averages derive from sum+count at the end.
-- **skewed join keys**: one hot key sends its whole partition to a
-  single task. Salting the skewed (probe) side and replicating the
-  build side once per salt value spreads the hot key over n_salts tasks
-  at the cost of duplicating build rows n_salts times — so it applies
-  when the build side is small-ish but too big (or too skewed) to
-  broadcast.
+skew; ``salted_join`` is the explicit form for the case AQE can't fix:
+one hot join key sends its whole partition to a single task. Salting
+the skewed (probe) side and replicating the build side once per salt
+value spreads the hot key over n_salts tasks at the cost of duplicating
+build rows n_salts times — so it applies when the build side is
+small-ish but too big (or too skewed) to broadcast. (Low-cardinality
+aggregation salts the same way; x135 does it inline.)
 """
 
 from __future__ import annotations
@@ -35,31 +28,6 @@ def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
     and retry-stable."""
     return df.withColumn(
         SALT_COL, F.pmod(F.hash(*df.columns), F.lit(n_salts))
-    )
-
-
-def salted_sum_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation: per-key SUM(value) and COUNT(*).
-
-    Phase 1 shuffles on (keys, salt) — parallelism n_salts × |keys| —
-    phase 2 combines the tiny partials on keys alone.
-    """
-    partial = (
-        with_salt(df, n_salts)
-        .groupBy(*keys, SALT_COL)
-        .agg(
-            F.sum(value_col).alias("__psum"),
-            F.count("*").alias("__pcnt"),
-        )
-    )
-    return partial.groupBy(*keys).agg(
-        F.sum("__psum").alias(f"sum_{value_col}"),
-        F.sum("__pcnt").cast("bigint").alias("n_rows"),
     )
 
 

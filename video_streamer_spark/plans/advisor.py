@@ -343,8 +343,7 @@ def lint_streaming(df: DataFrame) -> list[Finding]:
       job dies of state, not of compute;
     - a stream-stream join without a watermark on both sides: unmatched
       rows buffer unboundedly waiting for a match that may never come
-      (the two-sided-bound contract ``purchase_click_stream_join``
-      demonstrates).
+      (watermark both sides and bound the join in time on both sides).
 
     Advisory like ``lint_plan``: a complete-mode aggregation over a
     provably tiny key domain is legitimate — which is why this lints

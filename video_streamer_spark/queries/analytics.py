@@ -906,7 +906,8 @@ def x98_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ZORDER's math). The query pins the bit-exact curve: z-values over
 # (n_chars mod 1024, doc_id mod 1024), aggregated per curve tile with
 # the min/max extents of BOTH dimensions — tight per-tile boxes are
-# precisely the property file skipping exploits (asserted physically in
+# precisely the property file skipping exploits (asserted physically
+# through optimize_table(zorder_by=...) in
 # test_zorder_layout_prunes_both_dims). Pure bit arithmetic, no UDF;
 # the oracle recomputes the interleave with the same shifts.
 @query(

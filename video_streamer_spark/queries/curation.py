@@ -533,9 +533,8 @@ def x31_sampled_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroids are the n_cells rows with smallest (md5(id), id), assignment
 # is argmin of the routing score <c,c> - 2<e,c> with sequential-fold dots,
 # so the oracle below re-derives the identical cells, probes, and ranking.
-# The KMeans quantizer (similarity.ivf_topk) remains recall-property-
-# tested in tests/test_sources_and_ops.py — KMeans itself is not
-# cross-engine reproducible, which is an oracle limitation, not a gap.
+# (KMeans is not cross-engine reproducible, so the oracle could not
+# re-derive its cells.)
 _IVF_ROUTE = (
     "list_dot_product(p.cvec, p.cvec)"
     " - 2 * list_dot_product(CAST(e.embedding AS DOUBLE[]), p.cvec)"

@@ -4,14 +4,12 @@ reference gst-detection-tf.py:114-121). Here it is a proper DataFrame dim
 that broadcast-joins onto detection facts.
 
 Synthetic names (``label_1``..``label_80``) keep the table derivable in
-both engines for oracle parity; ``labels_from_file`` parses a real
-``id:name`` file with the reference's format when one is supplied.
+both engines for oracle parity.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 NUM_LABELS = 80
 
@@ -24,14 +22,4 @@ def labels(spark: SparkSession, n: int = NUM_LABELS) -> DataFrame:
     return spark.range(1, n + 1, 1, 1).selectExpr(
         "CAST(id AS INT) AS label_id",
         "concat('label_', CAST(id AS STRING)) AS label_name",
-    )
-
-
-def labels_from_file(spark: SparkSession, path: str) -> DataFrame:
-    """Parse an ``id:name`` label file (reference coco.label format)."""
-    raw = spark.read.text(path)
-    parts = F.split(F.trim(F.col("value")), ":", 2)
-    return raw.where(F.length(F.trim(F.col("value"))) > 0).select(
-        parts.getItem(0).cast("int").alias("label_id"),
-        F.lower(F.regexp_replace(parts.getItem(1), " ", "")).alias("label_name"),
     )

@@ -1,14 +1,18 @@
-"""Continuously-maintained materialized aggregate view over the
-versioned table — the streaming twin of x224's batch IVM.
+"""Continuously-maintained min/max view over the versioned table — the
+streaming twin of x224's batch IVM.
 
-``run_agg_view_pass`` drains the table's change feed (the ``table_cdf``
-DataSource with ``preimages=true``) and folds each micro-batch's SIGNED
-contributions into a keyed view table: +1/+value for ``insert`` and
-``update_postimage`` rows, -1/-value for ``delete`` and
-``update_preimage`` rows. The view is itself a versioned table keyed on
-the group columns, so every refresh is one atomic commit, replayed
-micro-batches no-op through the merge's idempotency key, and readers of
-the view get snapshot isolation for free.
+``run_minmax_view_pass`` drains the table's four-type change feed (the
+``table_cdf`` DataSource with ``preimages=true``) and RECOMPUTES DIRTY
+GROUPS: the feed's touched group keys mark groups dirty, and ONLY those
+groups are re-aggregated against the current snapshot (zone-map-
+enveloped read + broadcast semi-join), while clean groups keep their
+materialized values. min/max have no inverse — a deleted row that held
+the group's minimum forces re-reading the group — so the view pays for
+churn in reads, not in signed arithmetic. The view is itself a
+versioned table keyed on the group columns, so every refresh is one
+atomic commit, replayed micro-batches no-op through the merge's
+idempotency key, and readers of the view get snapshot isolation for
+free.
 
 Why this is the 100 TB shape: a full recompute of a corpus-wide
 aggregate reads the corpus; this pass reads the CHANGE FEED, whose
@@ -18,24 +22,10 @@ pipeline has no equivalent (its VDMS sink re-queries); the design
 follows Delta/Materialize-style incremental view maintenance re-stated
 in this table format's vocabulary.
 
-Exactness: sums are maintained over INTEGRAL columns only (callers
-quantize doubles first, the repo-wide oracle discipline) so base +
-signed deltas is bit-equal to recompute regardless of batch
-composition, replay, or commit interleaving — pinned by the
-stream-equals-recompute test in tests/test_streaming.py.
-
-Scope: ``run_agg_view_pass`` maintains count and sum only — the
-ALGEBRAIC aggregates a delete can be subtracted from. min/max (no
-inverse: a deleted row that held the group's minimum forces re-reading
-the group) are carried by the COMPLEMENTARY operator in this module,
-``run_minmax_view_pass`` — recompute-dirty-groups: the feed's touched
-group keys mark groups dirty, and ONLY those groups are re-aggregated
-against the current snapshot (zone-map-enveloped read + broadcast
-semi-join), while clean groups keep their materialized values. Null
-GROUP values are refused loudly per batch in both passes: they can
-never be merge keys (null never equals null in the keyed join), so a
-null group would re-insert on every pass instead of updating — silent
-duplication, the one failure the view could not self-detect.
+Null GROUP values are refused loudly per batch: they can never be merge
+keys (null never equals null in the keyed join), so a null group would
+re-insert on every pass instead of updating — silent duplication, the
+one failure the view could not self-detect.
 """
 
 from __future__ import annotations
@@ -43,19 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from video_streamer_spark.sources.cdf_source import (
-    register_cdf_source,
-    signed_contribution,
-)
+from video_streamer_spark.sources.cdf_source import register_cdf_source
 from video_streamer_spark.streaming.drain import drain_or_raise
-
-_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 
 def _require_group_cols(group_cols: list[str]) -> None:
     """A maintained view KEYS on its group columns; with none there is
-    no merge key and the keyed fold degenerates (``delta.where(None)``
-    would raise an opaque TypeError three calls deep). A global
+    no merge key and the keyed refresh degenerates. A global
     no-group aggregate is a single scalar — maintain it as a one-group
     view over a constant column instead."""
     if not group_cols:
@@ -64,143 +48,6 @@ def _require_group_cols(group_cols: list[str]) -> None:
             "them. For a global aggregate, group on a constant column "
             "(e.g. lit(0).alias('all'))."
         )
-
-
-def create_agg_view(
-    view_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    template: DataFrame,
-    n_buckets: int = 8,
-) -> int:
-    """Materialize an EMPTY aggregate view table keyed on the group
-    columns: ``group_cols`` + ``n_rows`` + one ``sum_<c>`` per summed
-    column, all counts/sums bigint. ``template`` supplies the group
-    columns' types (any DataFrame with those columns — typically the
-    source table's schema); group values must be non-null (they become
-    the view's merge keys, and null never equals null in the keyed
-    outer join — the same rule merge_table applies)."""
-    from video_streamer_spark.operators.table_format import create_table
-
-    _require_group_cols(group_cols)
-    for c in sum_cols:
-        dt = dict(template.dtypes).get(c)
-        if dt not in _INTEGRAL:
-            raise ValueError(
-                f"sum column {c!r} has type {dt!r}; the maintained view "
-                "is exact-integer only — quantize to a bigint first"
-            )
-    empty = template.select(*group_cols).limit(0)
-    view = empty.select(
-        *group_cols,
-        F.lit(0).cast("bigint").alias("n_rows"),
-        *[F.lit(0).cast("bigint").alias(f"sum_{c}") for c in sum_cols],
-    )
-    return create_table(view, view_path, group_cols, n_buckets=n_buckets)
-
-
-def run_agg_view_pass(
-    spark: SparkSession,
-    src_path: str,
-    view_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    checkpoint_dir: str,
-    timeout_sec: int = 300,
-) -> None:
-    """One incremental refresh pass: drain ``src``'s four-type change
-    feed into the view table. The stream checkpoint remembers the last
-    folded version, so repeated calls move only the NEW commits (a
-    no-change call is a metadata poll), and the merge's
-    ``checkpoint:epoch`` idempotency key makes replayed epochs no-ops —
-    the view converges to recompute-at-current exactly once per commit
-    even across crashes and re-drains. Groups whose row count reaches
-    zero are DELETED from the view (a recompute would not emit them)."""
-    from video_streamer_spark.operators.table_format import (
-        merge_table,
-        read_table,
-    )
-
-    _require_group_cols(group_cols)
-    register_cdf_source(spark)
-    feed = (
-        spark.readStream.format("table_cdf")
-        .option("path", src_path)
-        .option("preimages", "true")
-        .load()
-    )
-
-    def fold_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sgn = signed_contribution()
-        delta = batch_df.groupBy(*group_cols).agg(
-            F.sum(sgn).alias("_dn"),
-            *[
-                F.sum(sgn * F.col(c).cast("bigint")).alias(f"_d_{c}")
-                for c in sum_cols
-            ],
-        )
-        # persisted across the TWO actions below (null check + merge):
-        # delta's lineage is the whole window's change-feed diff, and
-        # without the pin the merge would recompute that diff from
-        # scratch — every refresh paying the window cost twice
-        delta = delta.persist()
-        try:
-            # null group values can never be merge keys (null != null
-            # in the keyed join): they would re-insert every pass
-            # instead of updating — refuse loudly. One bounded job on
-            # the already-aggregated (groups-sized) delta frame.
-            null_pred = None
-            for c in group_cols:
-                p = F.col(c).isNull()
-                null_pred = p if null_pred is None else (null_pred | p)
-            if delta.where(null_pred).limit(1).count():
-                raise ValueError(
-                    f"null value in group column(s) {group_cols} "
-                    "inside an already-committed change window: the "
-                    "maintained view cannot key on null groups. This "
-                    "stream is wedged — retries replay the same pinned "
-                    "window. Recover by fixing the SOURCE (coalesce "
-                    "null groups to a sentinel) and rebuilding the "
-                    "view from scratch: drop BOTH this checkpoint and "
-                    "the view table (a fresh checkpoint over the old "
-                    "view would double-fold history)."
-                )
-            # the view's CURRENT state is re-read every batch by
-            # design — it is the maintained accumulator, not a static
-            # dimension (the PER_BATCH_STATIC_READ lint's target)
-            cur = read_table(spark, view_path)
-            joined = delta.join(cur, group_cols, "left")
-            new_n = F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("_dn")
-            changes = joined.select(
-                *group_cols,
-                new_n.alias("n_rows"),
-                *[
-                    (
-                        F.coalesce(F.col(f"sum_{c}"), F.lit(0))
-                        + F.col(f"_d_{c}")
-                    ).alias(f"sum_{c}")
-                    for c in sum_cols
-                ],
-                F.when(new_n <= 0, F.lit("D"))
-                .otherwise(F.lit("U"))
-                .alias("__op"),
-            )
-            merge_table(
-                spark,
-                view_path,
-                changes,
-                idempotency_key=f"{checkpoint_dir}:{epoch_id}",
-            )
-        finally:
-            delta.unpersist()
-
-    q = (
-        feed.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_or_raise(q, timeout_sec)
 
 
 def _refuse_null_groups(df: DataFrame, group_cols: list[str]) -> None:
@@ -227,7 +74,7 @@ def _refuse_null_groups(df: DataFrame, group_cols: list[str]) -> None:
 
 # nested/complex types have no total order the view could materialize;
 # everything atomic (numerics, strings, date/time, boolean, binary)
-# min/maxes exactly — no accumulation, so no integral-only restriction
+# min/maxes exactly
 _UNORDERABLE_PREFIXES = ("array<", "map<", "struct<", "variant")
 
 
@@ -242,8 +89,8 @@ def create_minmax_view(
     columns: ``group_cols`` + ``n_rows`` (bigint) + one
     ``min_<c>``/``max_<c>`` pair per tracked column, each in the
     column's OWN type (min/max are exact for any orderable type — they
-    select a value, they never accumulate, so the sum view's
-    integral-only quantization rule does not apply here)."""
+    select a value, they never accumulate, so no integral-only
+    quantization rule applies)."""
     from video_streamer_spark.operators.table_format import create_table
 
     _require_group_cols(group_cols)
@@ -285,10 +132,9 @@ def run_minmax_view_pass(
     timeout_sec: int = 300,
 ) -> None:
     """One incremental refresh of a min/max view by RECOMPUTING DIRTY
-    GROUPS — the complementary operator to ``run_agg_view_pass`` for
-    aggregates with no inverse (the r10 verdict's capability gap: a
-    deleted row that held the group's minimum cannot be subtracted
-    out; the group must be re-read).
+    GROUPS — aggregates with no inverse (a deleted row that held the
+    group's minimum cannot be subtracted out; the group must be
+    re-read).
 
     Per micro-batch of the four-type change feed:
 
@@ -313,8 +159,7 @@ def run_minmax_view_pass(
 
     Why this is the 100 TB shape: the refresh cost is (churned groups'
     data) + (one broadcast of churn-sized keys), not a corpus-wide
-    re-aggregate — the same costs-the-churn contract as the sum view,
-    paid in reads instead of signed arithmetic.
+    re-aggregate.
 
     Convergence with concurrent writers: the snapshot read is CURRENT,
     which may be ahead of the batch's change window. Safe: any commit

@@ -9,8 +9,8 @@ read. Properties that make it safe at scale:
   an epoch after a failure. Additive MERGE into the rollup would then
   double-count; journaling partials keyed by ``batch-{epoch_id}`` makes
   a replay rewrite the same rows instead (the same per-epoch discipline
-  as ``pipeline.run_foreach_batch_sink`` and the reference's end-of-run
-  flush, gst-detection-tf.py:339-344).
+  as ``table_format.run_acid_merge_sink``'s ``checkpoint:epoch`` key and
+  the reference's end-of-run flush, gst-detection-tf.py:339-344).
 - **Partial-aggregability.** Journal rows are (n_events, sum_micros)
   in exact BIGINT — combinable in any order/grouping, so the read-side
   combine is a plain codegen hash agg. This is the same shape Spark's own

@@ -55,25 +55,3 @@ class PipelineMetricsListener(StreamingQueryListener):
             out["work"] += d.get("addBatch", 0) / 1000.0
             out["frames"] += p["num_input_rows"]
         return out
-
-
-def observed(df, name: str = "pipeline", **metric_exprs):
-    """Batch counterpart of the listener: attach named observation
-    metrics to a DataFrame (reference's per-stage accumulator dict,
-    gst-detection-tf.py:98-105, without a second pass over the data).
-
-    Returns (df, observation); read ``observation.get`` AFTER an action.
-    Metrics are computed task-side during the action — free, unlike a
-    separate .agg() job.
-
-    >>> df, obs = observed(frames, rows=F.count(F.lit(1)),
-    ...                    mean_score=F.avg("score"))
-    >>> df.write...; obs.get["rows"]
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    if not metric_exprs:
-        metric_exprs = {"rows": F.count(F.lit(1))}
-    obs = Observation(name)
-    return df.observe(obs, *[c.alias(n) for n, c in metric_exprs.items()]), obs

@@ -6,11 +6,12 @@ micro-batches. Design decisions, each fixing a reference quirk:
 
 - **bounded state**: the reference buffers every DB row in memory and
   flushes once at EOS (gst-detection-tf.py:322,339-344) — unbounded
-  state. Our sinks write per micro-batch via foreachBatch.
-- **idempotence**: sink output goes to an epoch-keyed subdirectory
-  (``batch-<epoch_id>``) with Overwrite mode, so a retried epoch
-  replaces itself instead of duplicating — exactly-once end state on
-  top of at-least-once task retries. Rows carry real
+  state. The store sink writes per micro-batch via foreachBatch.
+- **idempotence**: the store sink is
+  ``table_format.run_acid_merge_sink``: each epoch commits one table
+  version keyed by ``checkpoint:epoch``, so a retried epoch is a no-op
+  instead of a duplicate — exactly-once end state on top of
+  at-least-once epoch delivery. Rows carry real
   ``(frame_id, box_idx)`` lineage (fixing quirk 2: the reference stored
   the box index as ``_ref`` and lost the frame id).
 - **late data**: ``withWatermark`` bounds aggregation state; the
@@ -25,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from video_streamer_spark.catalog import table
 from video_streamer_spark.streaming.drain import drain_or_raise
 
 
@@ -123,168 +123,3 @@ def run_available_now(
     )
     drain_or_raise(q, timeout_sec, f"run_available_now({sink_name})")
     return sink_name
-
-
-def run_foreach_batch_sink(
-    stream_df: DataFrame,
-    out_dir: str,
-    key_cols: list[str],
-    timeout_sec: int = 300,
-):
-    """Idempotent bulk sink: per-epoch Overwrite into batch-<epoch_id>/.
-
-    The reference's single end-of-run VDMS flush (gst-detection-tf.py:
-    339-344) becomes a per-micro-batch bulk write; retries of an epoch
-    overwrite the same directory, so downstream readers of ``out_dir``
-    see each row exactly once. In-batch duplicates (possible after
-    shuffle retries) are dropped on the declared key.
-    """
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.dropDuplicates(key_cols)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{epoch_id}")
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_or_raise(q, timeout_sec, "run_foreach_batch_sink")
-
-
-def purchase_click_stream_join(
-    spark: SparkSession,
-    sf_dir: str,
-    window_seconds: int = 7200,
-    watermark: str = "3 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream inner join: each purchase joined to same-user clicks
-    in the preceding ``window_seconds`` (the streaming twin of the as-of
-    candidate set, before top-1 selection).
-
-    Both sides carry watermarks and the join has a two-sided time bound,
-    so state is provably evictable: a buffered click can be dropped once
-    the purchase watermark passes click_ts + window. Without the bound
-    (or the watermarks) state grows forever — the same unbounded-buffer
-    mistake the reference makes with its EOS flush
-    (gst-detection-tf.py:322).
-    """
-    ev = events_stream(spark, sf_dir)
-    purchases = (
-        ev.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    # outer variants hold unmatched rows in state until the watermark
-    # proves no match can still arrive, then emit them with nulls —
-    # exactly the late-data discipline the reference lacks
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window_seconds} SECONDS")),
-        how,
-    ).select("purchase_id", "click_id", "p_user", "p_ts", "c_ts")
-
-
-def synthetic_frame_stream(
-    spark: SparkSession,
-    rows_per_second: int = 1000,
-    payload_bytes: int = 256,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Synthetic frame source for load testing — the reference's
-    benchmark mode replays one video file under load (benchmark.sh:15);
-    the Spark-native analog is the rate source: unbounded
-    (timestamp, value) rows at a controlled rate, mapped to deterministic
-    binary payloads keyed by frame_id.
-
-    Payload = the frame_id rendered and repeated to ``payload_bytes`` —
-    cheap, deterministic, and unique per frame, so downstream inference
-    (stub model) produces verifiable detections under load.
-    """
-    reader = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    )
-    if n_partitions is not None:
-        reader = reader.option("numPartitions", n_partitions)
-    rate = reader.load()
-    payload = F.encode(
-        F.rpad(F.concat(F.col("value").cast("string"), F.lit(":")),
-               payload_bytes, "x"),
-        "UTF-8",
-    )
-    return rate.select(
-        F.col("value").alias("frame_id"),
-        F.col("timestamp").alias("ts"),
-        payload.alias("payload"),
-    )
-
-
-def run_bucketed_table_sink(
-    stream_df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 8,
-    timeout_sec: int = 300,
-):
-    """Stream into a BUCKETED catalog table — the queryable-store sink
-    (VDMS role) with a join-optimized layout: downstream joins on the
-    bucket key read the table with zero Exchanges.
-
-    Idempotence: rows land in an ``epoch=<id>`` partition and each epoch
-    OVERWRITES only its own partition (dynamic partitionOverwriteMode),
-    so a retried epoch replaces itself — the same exactly-once-end-state
-    contract as run_foreach_batch_sink, but into a catalog table that
-    keeps bucket metadata.
-    """
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = batch_df.withColumn("epoch", F.lit(int(epoch_id)))
-        if not spark.catalog.tableExists(table_name):
-            (
-                out.write.mode("overwrite")
-                .format("parquet")
-                .partitionBy("epoch")
-                .bucketBy(n_buckets, *bucket_cols)
-                .sortBy(*bucket_cols)
-                .saveAsTable(table_name)
-            )
-        else:
-            # per-write dynamic overwrite: only this epoch's partition is
-            # replaced, WITHOUT mutating the shared session conf (a session-
-            # level partitionOverwriteMode=dynamic would silently change the
-            # semantics of later unrelated partitioned overwrite writes)
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .format("parquet")
-                .insertInto(table_name)
-            )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_or_raise(q, timeout_sec, "run_bucketed_table_sink")

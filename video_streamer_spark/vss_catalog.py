@@ -9,7 +9,6 @@ item 3 — the last registry-dict ergonomic on the statement surface)::
     table_sql(spark, "MERGE INTO orders_v t USING chg s ON s.k = t.k "
                      "WHEN MATCHED THEN UPDATE SET *",
               sources={"chg": changes_df})
-    df = vss_catalog.load_snapshot(spark, "orders_v", version=3)
 
 Resolution contract: an explicit ``tables={...}`` argument to
 ``table_sql`` OVERRIDES the catalog per name (the registered binding
@@ -24,9 +23,8 @@ by every SparkSession in the process and never persisted — exactly a
 session catalog, not a metastore. The Python DataSources
 (``table_snapshot`` / ``table_cdf``) cannot read it directly because
 their methods execute in Spark's data-source runner process, which
-shares no memory with the driver; ``load_snapshot`` /
-``stream_changes`` bridge that by resolving the name driver-side and
-passing the resolved PATH option across.
+shares no memory with the driver; a caller resolves the name
+driver-side (``resolve``) and passes the PATH option across.
 
 Reference contrast: the reference pipeline (gst-detection-tf.py) has
 no catalog at all — sources are hard-coded shell arguments (run.sh).
@@ -81,52 +79,3 @@ def registered() -> dict[str, str]:
 def clear() -> None:
     with _LOCK:
         _REGISTRY.clear()
-
-
-def load_snapshot(
-    spark,
-    name: str,
-    version: int | None = None,
-    timestamp: float | str | None = None,
-):
-    """``spark.read.format("table_snapshot")`` over a registered name —
-    the driver-side bridge documented in the module docstring. Pins are
-    the DataSource's own (mutually exclusive; default current-at-load).
-    """
-    from video_streamer_spark.sources.snapshot_source import (
-        register_snapshot_source,
-    )
-
-    path = resolve(name)
-    if path is None:
-        raise KeyError(
-            f"{name!r} is not registered (known: {sorted(registered())})"
-        )
-    register_snapshot_source(spark)
-    r = spark.read.format("table_snapshot").option("path", path)
-    if version is not None:
-        r = r.option("version", str(version))
-    if timestamp is not None:
-        r = r.option("timestamp", str(timestamp))
-    return r.load()
-
-
-def stream_changes(spark, name: str, starting_version: int = 1, **options):
-    """``spark.readStream.format("table_cdf")`` over a registered name
-    (same driver-side resolution bridge as ``load_snapshot``)."""
-    path = resolve(name)
-    if path is None:
-        raise KeyError(
-            f"{name!r} is not registered (known: {sorted(registered())})"
-        )
-    from video_streamer_spark.sources.cdf_source import register_cdf_source
-
-    register_cdf_source(spark)
-    r = (
-        spark.readStream.format("table_cdf")
-        .option("path", path)
-        .option("startingVersion", str(starting_version))
-    )
-    for k, v in options.items():
-        r = r.option(k, str(v))
-    return r.load()
