@@ -92,16 +92,16 @@ def test_unpruned_wide_scan_flags(spark):
     assert "UNPRUNED_SCAN" not in codes(lint_plan(good))
 
 
-def test_streaming_agg_without_watermark_flags(spark, tmp_path):
+def test_streaming_agg_without_watermark_flags(spark):
     from video_streamer_spark.plans.advisor import lint_streaming
     from video_streamer_spark.streaming.pipeline import events_stream
 
-    events = events_stream(spark, SF_ORACLE, str(tmp_path / "s1"))
+    events = events_stream(spark, SF_ORACLE)
     bad = events.groupBy("event_type").count()
     assert "UNBOUNDED_STATE_AGG" in codes(lint_streaming(bad))
 
 
-def test_streaming_windowed_with_watermark_is_clean(spark, tmp_path):
+def test_streaming_windowed_with_watermark_is_clean(spark):
     from video_streamer_spark.plans.advisor import lint_streaming
     from video_streamer_spark.streaming.pipeline import (
         events_stream,
@@ -109,32 +109,32 @@ def test_streaming_windowed_with_watermark_is_clean(spark, tmp_path):
         tumbling_stream,
     )
 
-    events = events_stream(spark, SF_ORACLE, str(tmp_path / "s2"))
+    events = events_stream(spark, SF_ORACLE)
     assert not lint_streaming(tumbling_stream(events))
-    events2 = events_stream(spark, SF_ORACLE, str(tmp_path / "s3"))
+    events2 = events_stream(spark, SF_ORACLE)
     assert not lint_streaming(session_stream(events2))
 
 
-def test_streaming_dedup_without_watermark_flags(spark, tmp_path):
+def test_streaming_dedup_without_watermark_flags(spark):
     from video_streamer_spark.plans.advisor import lint_streaming
     from video_streamer_spark.streaming.pipeline import events_stream
 
-    events = events_stream(spark, SF_ORACLE, str(tmp_path / "s4"))
+    events = events_stream(spark, SF_ORACLE)
     bad = events.dropDuplicates(["user_id"])
     assert "UNBOUNDED_STATE_DEDUP" in codes(lint_streaming(bad))
 
 
-def test_stream_stream_join_without_watermarks_flags(spark, tmp_path):
+def test_stream_stream_join_without_watermarks_flags(spark):
     from video_streamer_spark.plans.advisor import lint_streaming
     from video_streamer_spark.streaming.pipeline import events_stream
 
-    a = events_stream(spark, SF_ORACLE, str(tmp_path / "s5")).alias("a")
-    b = events_stream(spark, SF_ORACLE, str(tmp_path / "s6")).alias("b")
+    a = events_stream(spark, SF_ORACLE).alias("a")
+    b = events_stream(spark, SF_ORACLE).alias("b")
     bad = a.join(b, F.col("a.user_id") == F.col("b.user_id"))
     assert "UNBOUNDED_STREAM_JOIN" in codes(lint_streaming(bad))
 
 
-def test_two_sided_bounded_stream_join_is_clean(spark, tmp_path):
+def test_two_sided_bounded_stream_join_is_clean(spark):
     """A purchase-click join that watermarks BOTH sides and bounds the
     join in time on both sides — clean."""
     from video_streamer_spark.plans.advisor import lint_streaming

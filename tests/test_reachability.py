@@ -1,7 +1,10 @@
-"""Reachability guard: every top-level def in the package must be
-reachable from code that runs outside the test suite.
+"""Reachability guard: every top-level def and module-level constant in
+the package must be reachable from code that runs outside the test
+suite, and every import must be read.
 
-Roots are every non-import module-level statement and every decorator
+A constant is a module-level assignment to plain non-dunder names; it
+takes part in the closure like a def, with its value as its body. Roots
+are every other non-import module-level statement and every decorator
 in ``video_streamer_spark/`` (this covers the ``QUERIES``/``ORACLES``
 registrations and ``__all__``), every decorated top-level def, and every
 name in the runnable scripts (``bench.py``, ``bench_compare.py``,
@@ -10,9 +13,14 @@ closure follows the names each reached def's body uses. Matching is by
 name (``Name`` ids, attribute names, import aliases and identifier-shaped
 string constants), so a name collision can only keep a def, never drop
 one. A def outside the closure fails this test unless ``KEEP`` names it
-with a reason; a ``KEEP`` entry that no longer names an unreached def
-fails too, so the map cannot go stale. Pure ``ast``: no Spark, no
-imports of the package.
+with a reason (what a kept def uses is kept with it); a ``KEEP`` entry
+that no longer names an unreached def fails too, so the map cannot go
+stale.
+
+An import, at module level or inside a function, must bind a name its
+own scope reads outside import statements. Imports for their side
+effect say so with ``# noqa: F401``. Pure ``ast``: no Spark, no imports
+of the package.
 """
 
 from __future__ import annotations
@@ -46,12 +54,20 @@ KEEP = {
     "load_snapshot_round": "test reference for the verified-hash snapshot",
 }
 
-_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEFS = (*_FUNCS, ast.ClassDef)
+_IMPORTS = (ast.Import, ast.ImportFrom)
 
 
-def _names(node: ast.AST) -> set[str]:
+def _names(node: ast.AST, skip: tuple = ()) -> set[str]:
+    """Names used under ``node``, not looking inside ``skip`` node types."""
     out: set[str] = set()
-    for n in ast.walk(node):
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        if isinstance(n, skip):
+            continue
+        todo += ast.iter_child_nodes(n)
         t = type(n)  # exact-type dispatch keeps the scan well under 1 s
         if t is ast.Name:
             out.add(n.id)
@@ -65,9 +81,23 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _constant_names(st: ast.stmt) -> list[str]:
+    """Names a module-level assignment binds, when all are plain
+    non-dunder names; else []."""
+    if isinstance(st, ast.Assign):
+        targets = st.targets
+    elif isinstance(st, ast.AnnAssign) and st.value is not None:
+        targets = [st.target]
+    else:
+        return []
+    if all(type(t) is ast.Name and not t.id.startswith("__") for t in targets):
+        return [t.id for t in targets]
+    return []
+
+
 @functools.cache
 def _scan():
-    """(defs, reached): defs maps a def name to its [(module, node)]."""
+    """(defs, roots): defs maps a def name to its [(module, node)]."""
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: set[str] = set()
     for path in sorted(_PKG.rglob("*.py")):
@@ -79,12 +109,19 @@ def _scan():
                     roots |= _names(dec)
                 if st.decorator_list:
                     roots.add(st.name)
-            elif not isinstance(st, (ast.Import, ast.ImportFrom)):
+            elif _constant_names(st):
+                for name in _constant_names(st):
+                    defs.setdefault(name, []).append((mod, st))
+            elif not isinstance(st, _IMPORTS):
                 roots |= _names(st)
     scripts = [_ROOT / s for s in _SCRIPTS]
     scripts += sorted((_ROOT / "perfbench").glob("*.py"))
     for path in scripts:
         roots |= _names(ast.parse(path.read_text()))
+    return defs, frozenset(roots)
+
+
+def _closure(defs, roots) -> set[str]:
     reached: set[str] = set()
     todo = [n for n in roots if n in defs]
     while todo:
@@ -94,7 +131,7 @@ def _scan():
         reached.add(name)
         for _, node in defs[name]:
             todo += [n for n in _names(node) if n in defs and n not in reached]
-    return defs, reached
+    return reached
 
 
 def _unreached(defs, reached):
@@ -107,23 +144,25 @@ def _unreached(defs, reached):
 
 
 def test_every_package_def_is_reachable():
-    defs, reached = _scan()
-    dead = sorted(
-        (mod, line, name)
-        for mod, line, name in _unreached(defs, reached)
-        if name not in KEEP and mod not in KEEP
-    )
+    defs, roots = _scan()
+    # a kept def keeps what it uses
+    kept = {
+        name
+        for name, sites in defs.items()
+        if name in KEEP or any(mod in KEEP for mod, _ in sites)
+    }
+    dead = sorted(_unreached(defs, _closure(defs, roots | kept)))
     assert not dead, (
-        "top-level defs no registered query, benchmark or bench script "
-        "reaches — delete them with their tests, or add them to KEEP "
-        "with a reason:\n"
+        "top-level defs or constants no registered query, benchmark or "
+        "bench script reaches — delete them with their tests, or add them "
+        "to KEEP with a reason:\n"
         + "\n".join(f"  video_streamer_spark/{m}:{ln} {n}" for m, ln, n in dead)
     )
 
 
 def test_keep_entries_name_unreached_defs():
-    defs, reached = _scan()
-    unreached = _unreached(defs, reached)
+    defs, roots = _scan()
+    unreached = _unreached(defs, _closure(defs, roots))
     stale = [
         key
         for key in KEEP
@@ -132,4 +171,42 @@ def test_keep_entries_name_unreached_defs():
     assert not stale, (
         f"KEEP entries that name no unreached def (now reached, renamed "
         f"or deleted) — drop them: {stale}"
+    )
+
+
+def _own_nodes(scope: ast.AST):
+    """Nodes of ``scope`` outside its nested functions, lambdas and classes."""
+    todo = list(ast.iter_child_nodes(scope))
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, (*_DEFS, ast.Lambda)):
+            todo += ast.iter_child_nodes(node)
+
+
+def test_every_import_is_read():
+    unread = []
+    for path in sorted(_PKG.rglob("*.py")):
+        text = path.read_text()
+        lines = text.splitlines()
+        tree = ast.parse(text)
+        for scope in [tree, *(n for n in ast.walk(tree) if isinstance(n, _FUNCS))]:
+            imports = [
+                n
+                for n in _own_nodes(scope)
+                if isinstance(n, _IMPORTS)
+                and getattr(n, "module", None) != "__future__"
+                and "noqa: F401" not in lines[n.lineno - 1]
+            ]
+            if not imports:
+                continue
+            read = _names(scope, skip=_IMPORTS)
+            unread += [
+                (path.relative_to(_PKG).as_posix(), n.lineno, bound)
+                for n in imports
+                for a in n.names
+                if (bound := a.asname or a.name.split(".")[0]) not in read
+            ]
+    assert not unread, "imports nothing in their scope reads — delete them:\n" + "\n".join(
+        f"  video_streamer_spark/{m}:{ln} {name}" for m, ln, name in sorted(unread)
     )

@@ -26,12 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimensions that should always end up on the broadcast side of a
-# join (the reference's only "join" is an 80-row label-dict lookup,
-# gst-detection-tf.py:114-121,396 — same shape).
-BROADCAST_DIMS = frozenset({"region", "nation", "labels"})
-
-
 # DataFrame handles are immutable plans — safe to reuse. Each table()
 # call otherwise pays a parquet footer read + analysis (~10-20 ms); a
 # bench/driver run builds hundreds of them. Keyed by applicationId so a

@@ -41,7 +41,6 @@ from video_streamer_spark.functions.caching import bounded_persist, pooled
 
 NUM_MINHASH = 8          # permutations (seeded md5 salts)
 MINHASH_BAND_ROWS = 2    # rows per LSH band → 4 bands
-SIMHASH_BITS = 32        # 8 hex chars of md5
 DEFAULT_SHINGLE = 3      # tokens per shingle
 
 

@@ -63,8 +63,6 @@ def median_per_group(
     )
 
 
-PACKED_SCHEMA = "stream string, doc_id bigint, n_tokens bigint, seq_id bigint"
-
 # composite-stream encoding: unit separator between parts, a sentinel
 # for NULL parts — both outside the testdata alphabet, so the encoding
 # is injective on real keys and the oracle can reproduce it with

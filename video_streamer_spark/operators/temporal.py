@@ -25,8 +25,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def asof_join(

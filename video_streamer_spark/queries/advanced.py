@@ -1637,8 +1637,6 @@ def x130_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x131_array_custom_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from video_streamer_spark.operators.text import tokens_col
-
     docs = table(spark, sf_dir, "documents")
     cmp_sql = (
         "array_sort(array_distinct({t}), (l, r) -> CASE"

@@ -834,8 +834,6 @@ def _index_path(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """,
 )
 def x155_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from video_streamer_spark.operators.similarity import (
         ivf_index_build,
         ivf_index_search,
@@ -1072,8 +1070,6 @@ def x158_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x159_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from video_streamer_spark.functions.parity import round4
     from video_streamer_spark.operators.similarity import (
         ivfpq_index_build,
@@ -1422,8 +1418,6 @@ def x163_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x164_index_upsert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from video_streamer_spark.operators.similarity import (
         ivf_index_build,
         ivf_index_search,

@@ -424,7 +424,6 @@ def x35_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x36_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_streamer_spark.catalog import register_views
-    from video_streamer_spark.functions.parity import round2
 
     register_views(spark, sf_dir)
     return spark.sql(

@@ -14,13 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from video_streamer_spark.catalog import table
 from video_streamer_spark.functions.parity import (
-    dec,
     round2,
-    date_str,
     sql_round2,
 )
 from video_streamer_spark.queries import query

@@ -106,6 +106,63 @@ def session_stream(events: DataFrame, gap: str = "30 minutes",
     )
 
 
+def _backlog_bytes(path: str) -> int | None:
+    """Bytes of the data files a file-source stream lists under ``path``
+    (a glob of files and of dirs walked through symlinks; hidden ``_``/``.``
+    names skipped, as Spark skips them), or None for a non-local path."""
+    import glob
+    import os
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = url.path if url.scheme else path
+    total = 0
+    for root in glob.glob(local):
+        if os.path.isfile(root):
+            total += os.path.getsize(root)
+        for d, dirs, files in os.walk(root, followlinks=True):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            total += sum(
+                os.path.getsize(os.path.join(d, f))
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+    return total
+
+
+def _scan_splits(backlog_bytes: int, split_bytes: int, ceiling: int) -> int:
+    """One state partition per scan split of the backlog, in [1, ceiling]."""
+    return max(1, min(ceiling, -(-backlog_bytes // split_bytes)))
+
+
+def _state_partitions(stream_df: DataFrame) -> int:
+    """``run_available_now``'s state-partition count. A streaming leaf
+    whose files cannot be seen from here (rate, memory, Kafka, Python
+    data sources, remote paths), or an empty backlog, keeps the
+    session's ``spark.sql.shuffle.partitions``."""
+    spark = stream_df.sparkSession
+    ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves()
+    backlog = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue  # the static side of a stream-static join holds no state
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            return ceiling
+        path = leaf.dataSource().options().get("path")
+        n = _backlog_bytes(path.get()) if path.isDefined() else None
+        if n is None:
+            return ceiling
+        backlog += n
+    if backlog == 0:
+        return ceiling
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return _scan_splits(backlog, split, ceiling)
+
+
 def run_available_now(
     stream_df: DataFrame,
     sink_name: str,
@@ -113,13 +170,35 @@ def run_available_now(
     timeout_sec: int = 300,
 ):
     """Drain the stream into an in-memory table and stop (EOS semantics,
-    reference O21/O24). Returns the sink table name for spark.sql()."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    reference O21/O24). Returns the sink table name for spark.sql().
+
+    State is sized to the backlog, not to the box: a stateful operator
+    keeps one state-store instance per shuffle partition and every
+    trigger commits each of them, empty or not. So the stream starts
+    with one state partition per ``spark.sql.files.maxPartitionBytes``
+    split of its source files' bytes — the count of scan tasks the
+    backlog needs — between 1 and the session's
+    ``spark.sql.shuffle.partitions``; a large stream runs exactly as
+    before, and a source whose files cannot be seen keeps the session
+    value (``_state_partitions``). The count is set only around
+    ``start()``: the query clones the session there and pins the count
+    in its checkpoint, and the caller's session gets its value back
+    even when ``start()`` raises. Another thread starting work on the
+    same session during ``start()`` would see the count too.
+    """
+    spark = stream_df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(_state_partitions(stream_df)))
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(sink_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, prior)
     drain_or_raise(q, timeout_sec, f"run_available_now({sink_name})")
     return sink_name
