@@ -152,3 +152,63 @@ def test_datasource_serves_from_external_cwd(tmp_path, source):
     assert proc.returncode == 0 and "DRIVE-OK" in proc.stdout, (
         proc.stdout[-2000:] + proc.stderr[-6000:]
     )
+
+
+INFER_DRIVE = textwrap.dedent(
+    '''
+    import sys
+
+    sys.path.insert(0, sys.argv[1])
+
+    from pyspark.sql import SparkSession
+
+    from video_streamer_spark.operators import npmodel
+    from video_streamer_spark.operators.inference import infer_detections
+
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    frames = spark.createDataFrame(
+        [(i, npmodel.render_frame(i)) for i in range(8)],
+        "frame_id long, payload binary",
+    )
+    got = sorted(
+        tuple(r)
+        for r in infer_detections(
+            frames, model_loader=npmodel.load_tiny_conv
+        ).collect()
+    )
+    want = sorted(
+        (i, k, *box)
+        for i in range(8)
+        for k, box in enumerate(
+            npmodel.tiny_conv_model(npmodel.render_frame(i), i)
+        )
+    )
+    assert got == want and len(got) == 8, (got, want)
+    spark.stop()
+    print("DRIVE-OK")
+    '''
+)
+
+
+def test_inference_ships_the_model_loaders_module(tmp_path):
+    """``infer_detections(model_loader=npmodel.load_tiny_conv)`` from an
+    external cwd, with no caller shipping ``npmodel``: the operator
+    ships the loader's in-package module, so the workers can run it."""
+    script = tmp_path / "drive.py"
+    script.write_text(INFER_DRIVE)
+    proc = subprocess.run(
+        [sys.executable, str(script), str(REPO)],
+        cwd=tmp_path,
+        env=_env_without_repo(),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0 and "DRIVE-OK" in proc.stdout, (
+        proc.stdout[-2000:] + proc.stderr[-6000:]
+    )

@@ -21,6 +21,7 @@ UDF_CALLS = {
     "pandas_udf",
 }
 PKG = pathlib.Path(__file__).resolve().parents[1] / "video_streamer_spark"
+SHIPPING = "video_streamer_spark.functions.shipping"
 
 
 def _is_module(dotted: str) -> bool:
@@ -156,7 +157,7 @@ def _transitive_refs(owner: str, name: str) -> set[str]:
             return {
                 binds[n]
                 for n in _free_names(node) & set(binds)
-                if not binds[n].endswith("shipping")
+                if binds[n] != SHIPPING
             }
     return set()
 
@@ -200,7 +201,7 @@ def test_udf_closures_ship_their_cross_module_references():
             shipped_modules = {
                 mod_name if s == "sys.modules[__name__]" else binds.get(s, s)
                 for s in ships
-            }
+            } | {SHIPPING}  # shipping ships itself at import
             # candidate worker-side closures: every nested def/lambda
             # PLUS any MODULE-LEVEL function handed to a UDF call by
             # name (review r13 — applyInPandas(_module_level_fn, …)
@@ -260,6 +261,85 @@ def test_udf_closures_ship_their_cross_module_references():
     )
 
 
+def _is_guard(node: ast.AST) -> bool:
+    """``on_worker`` or ``shipping.on_worker``."""
+    return ast.unparse(node).split(".")[-1] == "on_worker"
+
+
+def _defs_named(tree: ast.AST, name: str | None) -> list[ast.FunctionDef]:
+    return [
+        d
+        for d in ast.walk(tree)
+        if isinstance(d, ast.FunctionDef) and d.name == name
+    ]
+
+
+def test_udf_functions_go_through_the_worker_guard():
+    """Every function handed to a Python worker — the first argument of
+    a UDF call, or a def decorated with ``pandas_udf`` — must run
+    through ``shipping.on_worker``: without it each task pays the
+    worker's eager zip-directory re-read of ``pyspark.zip`` and the
+    Spark jar (about 0.2 s, see functions/shipping.py). A def counts as
+    guarded when ``on_worker`` decorates it (below any ``pandas_udf``);
+    an argument counts when it is an ``on_worker(...)`` call."""
+    offenders: list[str] = []
+    n_handed = 0
+    for f in sorted(PKG.rglob("*.py")):
+        src = f.read_text()
+        if not any(k in src for k in UDF_CALLS):
+            continue
+        tree = ast.parse(src)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.FunctionDef):
+                udf_at = [
+                    i
+                    for i, d in enumerate(n.decorator_list)
+                    if "pandas_udf" in ast.unparse(d)
+                ]
+                if udf_at:
+                    n_handed += 1
+                    if not any(
+                        _is_guard(d)
+                        for d in n.decorator_list[udf_at[-1] + 1 :]
+                    ):
+                        offenders.append(
+                            f"{f}:{n.lineno}: pandas_udf {n.name} is not "
+                            "decorated with on_worker below pandas_udf"
+                        )
+            # a Call hands a function when its first argument is a name,
+            # a lambda or an on_worker(...) call; pandas_udf as a
+            # decorator factory (``pandas_udf("double")``) hands none
+            if not (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "attr", getattr(n.func, "id", None))
+                in UDF_CALLS
+                and n.args
+            ):
+                continue
+            arg = n.args[0]
+            if isinstance(arg, ast.Call) and _is_guard(arg.func):
+                n_handed += 1
+                continue
+            if not isinstance(arg, (ast.Name, ast.Lambda)):
+                continue
+            n_handed += 1
+            # a name defined more than once in a module (each operator's
+            # nested ``compute``) must be guarded at every definition
+            handed = _defs_named(tree, getattr(arg, "id", None))
+            if not handed or not all(
+                any(_is_guard(d) for d in h.decorator_list) for h in handed
+            ):
+                offenders.append(
+                    f"{f}:{n.lineno}: {ast.unparse(arg)} is handed to "
+                    f"{ast.unparse(n.func)} without on_worker"
+                )
+    assert n_handed >= 29, n_handed  # the walk still sees every site
+    assert not offenders, (
+        "functions handed to Python workers skip shipping.on_worker:\n"
+        + "\n".join(offenders)
+    )
+
+
 DATASOURCE_BASES = {
     "DataSource",
     "DataSourceReader",
@@ -310,7 +390,7 @@ def test_datasource_modules_ship_every_in_package_import():
             for a in _ship_args(node)
         }
         for mod in sorted(set(binds.values())):
-            if mod.endswith(".functions.shipping") or mod in shipped:
+            if mod == SHIPPING or mod in shipped:
                 continue
             offenders.append(
                 f"{f}: imports {mod} at module level without "

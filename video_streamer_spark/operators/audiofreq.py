@@ -72,7 +72,7 @@ def tone_frames(ids: DataFrame, id_col: str = "frame_id") -> DataFrame:
     executors, Arrow-batched."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
 
@@ -83,6 +83,7 @@ def tone_frames(ids: DataFrame, id_col: str = "frame_id") -> DataFrame:
         ]
     )
 
+    @on_worker
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             fids = pdf[id_col].astype("int64")
@@ -104,7 +105,7 @@ def dominant_bins(
     argmax over non-DC bins."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
     from video_streamer_spark.operators import multimodal
 
     ship_module(sys.modules[__name__])
@@ -122,6 +123,7 @@ def dominant_bins(
         ]
     )
 
+    @on_worker
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {

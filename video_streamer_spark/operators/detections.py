@@ -127,7 +127,7 @@ def annotate_frames(
         StructType,
     )
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
     from video_streamer_spark.operators import multimodal
     from video_streamer_spark.operators.multimodal import decode_frame
 
@@ -162,6 +162,7 @@ def annotate_frames(
         ]
     )
 
+    @on_worker
     def draw(batches):
         for pdf in batches:
             out = {"frame_id": [], "payload": [], "n_boxes": [], "out_byte_sum": []}

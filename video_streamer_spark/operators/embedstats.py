@@ -47,12 +47,13 @@ def gram_partials(
     yields the exact full-data Gram."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
 
     iu, ju = np.triu_indices(dim)
 
+    @on_worker
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):

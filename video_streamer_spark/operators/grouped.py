@@ -22,13 +22,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from video_streamer_spark.functions.shipping import ship_module
+from video_streamer_spark.functions.shipping import on_worker, ship_module
 
 ship_module(sys.modules[__name__])
 
 SCALED_SCHEMA = "event_id bigint, event_type string, value double, scaled double"
 
 
+@on_worker
 def _minmax_group(pdf: pd.DataFrame) -> pd.DataFrame:
     lo, hi = pdf["value"].min(), pdf["value"].max()
     span = hi - lo
@@ -49,6 +50,7 @@ def minmax_scale_per_group(
 
 
 @F.pandas_udf("double")
+@on_worker
 def median_udaf(v: pd.Series) -> float:
     """GROUPED_AGG pandas UDAF: median (interpolated middle — same
     definition DuckDB/Spark percentile use, and summation-free)."""
@@ -102,6 +104,7 @@ def pack_sequences(
     (SURVEY §2's curation family) alongside dedup and quality filters.
     """
 
+    @on_worker
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col)
         seqs = []

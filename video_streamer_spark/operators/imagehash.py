@@ -67,7 +67,7 @@ def dhash_frames(
     upstream (``multimodal.resize_payloads``) before hashing."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_mm)
@@ -75,6 +75,7 @@ def dhash_frames(
 
     geom = (height, width)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hashes = [], []

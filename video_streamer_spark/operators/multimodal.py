@@ -293,7 +293,7 @@ def encode_png_payloads(
 
     from pyspark.sql.functions import pandas_udf
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
@@ -347,6 +347,7 @@ def encode_png_payloads(
     )
 
     @pandas_udf("binary")
+    @on_worker
     def to_png(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
@@ -379,7 +380,7 @@ def encode_jpeg_payloads(
 
     from pyspark.sql.functions import pandas_udf
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
     from video_streamer_spark.operators import jpeg as _jpeg_mod
 
     ship_module(sys.modules[__name__])
@@ -392,6 +393,7 @@ def encode_jpeg_payloads(
     n = blocks_w * blocks_h
 
     @pandas_udf("binary")
+    @on_worker
     def to_jpeg(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
@@ -459,11 +461,12 @@ def payload_stats(frames: DataFrame, id_col: str = "doc_id", bin_col: str = "pay
 
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         state: dict[str, bool] = {}
         for pdf in batches:
@@ -566,11 +569,12 @@ def decode_ppm_frames(
     ndarray. There is no NotImplementedError branch on this path."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "width", "height",
@@ -616,11 +620,12 @@ def decode_frames_detail(
     against a SQL oracle that recomputes them from the source text."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in (
@@ -748,11 +753,12 @@ def decode_wav_stats(
     header facts come from the chunk walk, not from metadata columns."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in (
@@ -800,11 +806,12 @@ def audio_window_features(
     executor."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "win_idx", "energy", "crossings")}

@@ -95,7 +95,7 @@ def rendered_frames(ids, id_col: str = "frame_id"):
         StructType,
     )
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
 
@@ -106,6 +106,7 @@ def rendered_frames(ids, id_col: str = "frame_id"):
         ]
     )
 
+    @on_worker
     def render(batches):
         for pdf in batches:
             fids = pdf[id_col].astype("int64")

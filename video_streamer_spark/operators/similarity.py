@@ -217,7 +217,7 @@ def add_lsh_tables(
 
     from pyspark.sql.types import ArrayType, IntegerType
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
 
@@ -227,6 +227,7 @@ def add_lsh_tables(
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf(ArrayType(IntegerType()))
+    @on_worker
     def all_buckets(vs: pd.Series) -> pd.Series:
         mat = np.array(list(vs), dtype=np.float64)  # (n, dim)
         if fold_exact:
@@ -354,7 +355,7 @@ def embedding_near_pairs(
         StructType,
     )
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
 
@@ -446,6 +447,7 @@ def embedding_near_pairs(
         }
     )
 
+    @on_worker
     def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
         i, j = key
         sides = pdf["side"].to_numpy()
@@ -543,13 +545,14 @@ def _cell_router(quantizer):
 
     from pyspark.sql.types import LongType
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     # the UDF closes over _routing_scores: ship this module by value
     ship_module(sys.modules[__name__])
     cent_ids, cents, c2 = quantizer
 
     @F.pandas_udf(LongType())
+    @on_worker
     def assign_cell(vs: pd.Series) -> pd.Series:
         mat = np.array(list(vs), dtype=np.float64)
         return pd.Series(cent_ids[np.argmin(_routing_scores(mat, cents, c2), axis=1)])
@@ -594,7 +597,7 @@ def ivf_topk_pivots(
 
     from pyspark.sql.types import ArrayType, LongType
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
 
@@ -603,6 +606,7 @@ def ivf_topk_pivots(
     assign_cell = _cell_router(quantizer)
 
     @F.pandas_udf(ArrayType(LongType()))
+    @on_worker
     def probe_cells(vs: pd.Series) -> pd.Series:
         mat = np.array(list(vs), dtype=np.float64)
         scores = _routing_scores(mat, cents, c2)

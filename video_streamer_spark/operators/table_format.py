@@ -67,6 +67,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark.functions.shipping import on_worker
 from video_streamer_spark.operators import manifest
 from video_streamer_spark.operators.log_store import (
     LogEntryExistsError,
@@ -660,6 +661,7 @@ def _commit_blooms(
     h = df.select(*sel)
     n_cols = len(present)
 
+    @on_worker
     def partial(batches):
         import numpy as _np
         import pandas as _pd

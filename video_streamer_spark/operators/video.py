@@ -186,7 +186,7 @@ def decode_video_stats(
     ValueError for malformed bytes), both quarantined."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
@@ -197,6 +197,7 @@ def decode_video_stats(
         "first_frame_sum", "last_top_left",
     )
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", *stat_cols)}
@@ -248,7 +249,7 @@ def encode_mjpeg_payloads(
 
     from pyspark.sql.functions import pandas_udf
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
@@ -261,6 +262,7 @@ def encode_mjpeg_payloads(
     w_px, h_px = blocks_w * 8, blocks_h * 8
 
     @pandas_udf("binary")
+    @on_worker
     def to_avi(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
@@ -299,11 +301,12 @@ def probe_video_metadata(
     decode, reading only box headers instead of sample bytes."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_mp4_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in (
@@ -349,7 +352,7 @@ def encode_shifted_pair_payloads(
 
     from pyspark.sql.functions import pandas_udf
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
@@ -359,6 +362,7 @@ def encode_shifted_pair_payloads(
     w_px, h_px = blocks_w * 8, blocks_h * 8
 
     @pandas_udf("binary")
+    @on_worker
     def to_avi(ids: pd.Series) -> pd.Series:
         out = []
         for d in ids:
@@ -432,12 +436,13 @@ def estimate_global_motion(
     """
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
     ship_module(_mp4_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {
@@ -488,7 +493,7 @@ def encode_split_motion_payloads(
 
     from pyspark.sql.functions import pandas_udf
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
@@ -499,6 +504,7 @@ def encode_split_motion_payloads(
     w_px, h_px = blocks_w * 8, blocks_h * 8
 
     @pandas_udf("binary")
+    @on_worker
     def to_avi(ids: pd.Series) -> pd.Series:
         out = []
         for d in ids:
@@ -543,12 +549,13 @@ def estimate_motion_field(
     estimate_global_motion."""
     import sys
 
-    from video_streamer_spark.functions.shipping import ship_module
+    from video_streamer_spark.functions.shipping import on_worker, ship_module
 
     ship_module(sys.modules[__name__])
     ship_module(_jpeg_dep)
     ship_module(_mp4_dep)
 
+    @on_worker
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {
