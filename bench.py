@@ -192,12 +192,6 @@ def x10_replica(spark, sf_dir: str) -> str:
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     root = "/tmp/vss-bench-x10"
-    # the "-x10" suffix is load-bearing: _prebuilt_table keys its
-    # once-per-(app, sf) versioned-table slot on basename(sf_dir), so
-    # a mirror named exactly like the source tag would silently REUSE
-    # the small-scale prebuilt table for the x10 measurement (r13
-    # VERDICT item 6 — the x217 scale3 row needs a genuinely scaled
-    # build)
     mirror = f"{root}/{tag}-x10"
     ready = os.path.join(mirror, "_READY")
     fp = hashlib.sha256(
@@ -464,20 +458,35 @@ def _build_mirror(
         return sf_dir
 
 
+def stream_source_dir(spark, run_dir: str) -> tuple[str, list[str]]:
+    """A fresh flat dir of symlinks to the events files ``run_dir`` holds
+    now (the mirror stores them under events.parquet/), and those files.
+    Fresh per call, so no link can point at an older or deleted file."""
+    import glob
+
+    from video_streamer_spark import scratch
+
+    ev = os.path.join(run_dir, "events.parquet")
+    files = (
+        sorted(glob.glob(os.path.join(ev, "*.parquet")))
+        if os.path.isdir(ev)
+        else [ev]
+    )
+    src = scratch.run_dir(spark, run_dir, "stream-bench")
+    return scratch.link_dir(src, files), files
+
+
 def stream_micro_bench(spark, run_dir: str) -> tuple[float, int, int]:
     """Drain the events table through the streaming pipeline end to end
     and return (sec, n_trigger_files, n_input_rows).
 
-    The events files are exposed as a flat dir of symlinks (the mirror
-    stores them under events.parquet/) so the streaming file source can
-    list them; maxFilesPerTrigger=1 makes each file one micro-batch.
+    The events files are exposed as a flat dir of symlinks
+    (``stream_source_dir``) so the streaming file source can list them;
+    maxFilesPerTrigger=1 makes each file one micro-batch.
     The drained query is q14's streaming twin (watermarked tumbling
     aggregation, streaming/pipeline.tumbling_stream) into a memory sink
     — the same operator the batch bench row times, through the actual
     micro-batch machinery. One warmup drain, then min-of-2."""
-    import glob
-    import hashlib
-
     from pyspark.sql import functions as F
 
     from video_streamer_spark.catalog import parquet_row_count
@@ -486,22 +495,8 @@ def stream_micro_bench(spark, run_dir: str) -> tuple[float, int, int]:
         tumbling_stream,
     )
 
+    src, files = stream_source_dir(spark, run_dir)
     ev = os.path.join(run_dir, "events.parquet")
-    files = (
-        sorted(glob.glob(os.path.join(ev, "*.parquet")))
-        if os.path.isdir(ev)
-        else [ev]
-    )
-    tag = hashlib.md5(ev.encode()).hexdigest()[:10]
-    src = f"/tmp/vss-stream-bench/src-{tag}"
-    os.makedirs(src, exist_ok=True)
-    for f in files:
-        link = os.path.join(src, os.path.basename(f))
-        if not os.path.exists(link):
-            try:
-                os.symlink(f, link)
-            except FileExistsError:
-                pass
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(ev).schema
     n_rows = parquet_row_count(run_dir, "events")
@@ -799,11 +794,9 @@ def main() -> None:
             from video_streamer_spark.operators.table_format import (
                 optimize_table,
             )
-            from video_streamer_spark.queries.extended2 import (
-                prebuilt_table_path,
-            )
+            from video_streamer_spark import scratch
 
-            tpath = prebuilt_table_path(spark, big_dir, "tombstone-orders")
+            tpath = scratch.slot(spark, big_dir, "tombstone-orders")
             t0 = time.perf_counter()
             optimize_table(
                 spark, tpath, sort_by="o_orderkey", files_per_bucket=4

@@ -6,7 +6,8 @@ directories visible by renaming them are pinned here, so a new
 per-module stage-and-swap protocol fails this tier until someone argues
 for it. The rollup journal is one of them: its per-epoch stage-and-rename
 write, replay idempotence and crash healing run in this default tier at
-SF_SMOKE.
+SF_SMOKE. Where scratch directories live is pinned here too: only
+``scratch.py`` names a temp location.
 """
 
 from __future__ import annotations
@@ -23,8 +24,12 @@ _PKG = pathlib.Path(__file__).resolve().parent.parent / "video_streamer_spark"
 RENAME_SWAP_MODULES = {
     "streaming/incremental.py",  # rollup journal epoch swap
     "operators/similarity.py",  # IVF index cell swap
-    "queries/extended2.py",  # prebuilt-table rename into place
+    "scratch.py",  # built_dir's rename into place
 }
+
+# The catalog warehouse dir is session configuration, not query scratch;
+# it stays where get_spark puts it.
+TEMP_PATHS_ALLOWED = {("session.py", "/tmp/vss-warehouse")}
 
 
 def _calls_os_rename(tree: ast.AST) -> bool:
@@ -59,6 +64,96 @@ def test_rename_swap_protocols_are_pinned():
         "operators/table_format instead, or update RENAME_SWAP_MODULES "
         "with the reason"
     )
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    ids = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        ) and ast.get_docstring(node, clean=False) is not None:
+            ids.add(id(node.body[0].value))
+    return ids
+
+
+def _temp_locations(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, what) for each ``/tmp`` string (docstrings aside) and each
+    use of the ``tempfile`` module."""
+    docs = _docstrings(tree)
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "/tmp" in node.value
+            and id(node) not in docs
+        ):
+            found.append((node.lineno, node.value))
+        elif isinstance(node, ast.Import):
+            found += [
+                (node.lineno, "import tempfile")
+                for a in node.names
+                if a.name == "tempfile"
+            ]
+        elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+            found.append((node.lineno, "from tempfile import"))
+    return found
+
+
+def test_only_scratch_names_a_temp_location():
+    """Every scratch directory comes from ``scratch.run_dir`` or
+    ``scratch.built_dir``: no other package module spells a ``/tmp`` path
+    or asks ``tempfile`` for one."""
+    found = sorted(
+        (rel, line, what)
+        for f in _PKG.rglob("*.py")
+        if (rel := f.relative_to(_PKG).as_posix()) != "scratch.py"
+        for line, what in _temp_locations(ast.parse(f.read_text(), str(f)))
+        if (rel, what) not in TEMP_PATHS_ALLOWED
+    )
+    assert not found, (
+        f"temp locations outside scratch.py: {found} — take the directory "
+        "from video_streamer_spark.scratch instead"
+    )
+    # the scan does see the one module that asks tempfile
+    assert _temp_locations(ast.parse((_PKG / "scratch.py").read_text()))
+
+
+def test_built_dir_loser_of_the_rename_race_discards_its_copy(spark, tmp_path):
+    """Two builders of one slot: the one that renames second drops its
+    staged copy and returns the winner's directory; later calls build
+    nothing."""
+    import glob
+
+    from video_streamer_spark import scratch
+
+    sf = str(tmp_path / "sf")
+    stages = []
+
+    def build(who):
+        def run(stage):
+            stages.append(stage)
+            os.makedirs(stage)
+            pathlib.Path(stage, "who").write_text(who)
+
+        return run
+
+    def loser(stage):
+        build("loser")(stage)
+        # another builder finishes while this one is still staging
+        scratch.built_dir(spark, sf, "race-test", build("winner"))
+
+    path = scratch.built_dir(spark, sf, "race-test", loser)
+    try:
+        assert path == scratch.slot(spark, sf, "race-test")
+        assert pathlib.Path(path, "who").read_text() == "winner"
+        assert scratch.built_dir(spark, sf, "race-test", build("late")) == path
+        assert len(stages) == 2
+        assert not any(os.path.exists(s) for s in stages)
+        assert not glob.glob(f"{path}.building-*")
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _halves(spark):

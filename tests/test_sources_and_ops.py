@@ -163,6 +163,18 @@ def test_embedding_near_pairs_block_invariance(spark):
     assert len(one) > 0
 
 
+def test_embedding_near_pairs_infers_its_eval_type(spark):
+    """The blocked scorer's type hints are complete, so applyInPandas
+    infers the grouped-map eval type instead of warning on every call."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        QUERIES["x05_embedding_near_pairs"](spark, SF_SMOKE)
+    hints = [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+    assert not hints, [str(w.message) for w in hints]
+
+
 def test_resize_payloads_shape(spark):
     """Resize: every output payload is exactly width*height bytes,
     truncated or zero-padded."""
@@ -2405,63 +2417,61 @@ def test_pii_scrub_counts_match_redactions(spark):
 
 
 def test_lifecycle_scratch_is_bounded_to_one_run(spark):
-    """x214/x215 build a fresh versioned table per invocation; the
-    round-8 VERDICT flagged that nothing deleted prior run dirs, so a
-    long-lived session leaked every historical table copy. Two
-    consecutive invocations must leave exactly ONE live run dir in the
-    (app, sf) slot, and a stale sibling app dir must be swept."""
+    """Lifecycle queries build a fresh table, index or journal per
+    invocation; a long-lived session must not keep every historical
+    copy. Two consecutive invocations must leave exactly ONE run dir in
+    the query's (app, sf) slot, and a stale app dir under the scratch
+    root must be swept."""
     import os
     import time
 
     from tests.conftest import SF_SMOKE
+    from video_streamer_spark import scratch
     from video_streamer_spark.queries import QUERIES
 
-    app = spark.sparkContext.applicationId
-    tag = os.path.basename(SF_SMOKE)
-    for name, base in (
-        ("x214_bloom_pruned_lookup", "vss-bloom"),
-        ("x215_tombstone_delete_read", "vss-tomb"),
+    for name, kind in (
+        ("x214_bloom_pruned_lookup", "bloom"),
+        ("x215_tombstone_delete_read", "tomb"),
+        ("x210_acid_snapshot_merge", "acid"),
+        ("x211_table_change_feed", "cdf"),
+        ("x212_optimized_pruned_range_read", "zonemap"),
+        ("x196_incremental_rollup", "incr"),
+        ("x204_incremental_join_view", "incr-join"),
     ):
-        root = f"/tmp/{base}"
-        # plant a dead-session dir, aged past the staleness horizon
-        stale = f"{root}/dead-app-{tag}"
-        os.makedirs(stale, exist_ok=True)
-        old = time.time() - 2 * 24 * 3600
+        # plant a dead session's app dir, aged past the staleness horizon
+        stale = os.path.join(scratch.root(), "dead-app")
+        os.makedirs(os.path.join(stale, f"{kind}-slot"), exist_ok=True)
+        old = time.time() - 2 * scratch.STALE_SECS
         os.utime(stale, (old, old))
         for _ in range(2):
             QUERIES[name](spark, SF_SMOKE).count()
-        slot = f"{root}/{app}-{tag}"
-        runs = sorted(os.listdir(slot))
-        assert len(runs) == 1, f"{name}: leaked run dirs {runs}"
         assert not os.path.exists(stale), f"{name}: stale app dir not swept"
+        runs = sorted(os.listdir(scratch.slot(spark, SF_SMOKE, kind)))
+        assert len(runs) == 1, f"{name}: leaked run dirs {runs}"
 
 
 def test_prebuilt_table_cleans_staging_on_failed_build(spark):
     """A build(stage) that raises must not leak its .building-* staging
-    dir — a leaked half-built table wastes /tmp and confuses the next
-    reader of the slot listing (ADVICE r9)."""
+    dir — a leaked half-built table wastes disk and confuses the next
+    reader of the slot listing — and must leave the slot unbuilt."""
     import glob
     import os
 
     import pytest
 
     from tests.conftest import SF_SMOKE
-    from video_streamer_spark.queries.extended2 import _prebuilt_table
-
-    app = spark.sparkContext.applicationId
-    tag = os.path.basename(SF_SMOKE)
+    from video_streamer_spark import scratch
 
     def bad_build(stage: str) -> None:
         os.makedirs(stage)
         raise RuntimeError("boom")
 
     with pytest.raises(RuntimeError, match="boom"):
-        _prebuilt_table(spark, SF_SMOKE, "failkind-test", bad_build)
-    leaked = glob.glob(
-        f"/tmp/vss-benchtable/{app}-{tag}/failkind-test.building-*"
-    )
+        scratch.built_dir(spark, SF_SMOKE, "failkind-test", bad_build)
+    path = scratch.slot(spark, SF_SMOKE, "failkind-test")
+    leaked = glob.glob(f"{path}.building-*")
     assert not leaked, f"staging dirs leaked: {leaked}"
-    assert not os.path.exists(f"/tmp/vss-benchtable/{app}-{tag}/failkind-test")
+    assert not os.path.exists(path)
 
 
 def test_lsh_bucket_cache_bounded_to_one(spark):

@@ -7,6 +7,7 @@ in ``test_streaming.py``.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pyspark.sql.functions as F
@@ -158,8 +159,12 @@ def test_state_partitions_arithmetic():
 def test_state_partitions_read_the_split_size(spark):
     """The rule divides by the session's maxPartitionBytes: shrinking the
     split to a third of the backlog gives three partitions."""
+    from video_streamer_spark import scratch
+
     stream = sp.tumbling_stream(sp.events_stream(spark, SF_ORACLE))
-    backlog = sp._backlog_bytes(sp._as_stream_dir(SF_ORACLE, "events"))
+    # the stream dir holds a symlink to the table file; the walk follows it
+    backlog = sp._backlog_bytes(scratch.slot(spark, SF_ORACLE, "stream-events"))
+    assert backlog == os.path.getsize(f"{SF_ORACLE}/events.parquet")
     prior = spark.conf.get(SPLIT)
     spark.conf.set(SPLIT, str(-(-backlog // 3)))
     try:

@@ -190,15 +190,18 @@ def test_streaming_chunking_matches_batch(spark):
     produce the identical chunk set when documents arrive as a stream —
     the stream↔batch equivalence contract extended to the curation ops."""
     from video_streamer_spark.operators.text import chunk_documents
-    from video_streamer_spark.streaming.pipeline import (
-        _as_stream_dir,
-        stream_dir,
-    )
+    from video_streamer_spark import scratch
+    from video_streamer_spark.streaming.pipeline import stream_dir
 
     docs = table(spark, SF_ORACLE, "documents")
     batch = rows_set(chunk_documents(docs))
 
-    src = _as_stream_dir(SF_ORACLE, "documents")
+    src = scratch.built_dir(
+        spark,
+        SF_ORACLE,
+        "stream-documents",
+        lambda stage: scratch.link_dir(stage, [f"{SF_ORACLE}/documents.parquet"]),
+    )
     stream = stream_dir(spark, src, docs.schema)
     name = sp.run_available_now(
         chunk_documents(stream), "chunk_sink", "append"

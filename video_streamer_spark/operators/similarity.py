@@ -448,7 +448,7 @@ def embedding_near_pairs(
     )
 
     @on_worker
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         i, j = key
         sides = pdf["side"].to_numpy()
         l_pdf, r_pdf = pdf[sides == 0], pdf[sides == 1]

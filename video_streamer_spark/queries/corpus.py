@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark import scratch
 from video_streamer_spark.catalog import table
 from video_streamer_spark.functions.caching import pooled
 from video_streamer_spark.queries import query
@@ -778,21 +779,6 @@ def x154_bpe_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
-def _index_path(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Per-session materialized-index location: keyed by (kind, sf tag,
-    applicationId) so concurrent sessions — parallel pytest workers, a
-    bench and the driver sharing one window — never share a mutable
-    index directory (r5 ADVICE: the shared fixed path raced rebuild vs
-    probe). Within one session rebuilds are idempotent overwrites;
-    across sessions there is nothing shared to race."""
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    app = spark.sparkContext.applicationId
-    return f"/tmp/vss-warehouse/{app}/{kind}-{tag}"
-
 # --------------------------------------------------------------------------
 # x155: MATERIALIZED IVF INDEX — build the cell-partitioned parquet
 # index, then answer a query batch by scanning ONLY the probed cell=
@@ -840,7 +826,7 @@ def x155_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    path = _index_path(spark, sf_dir, "ivf-index")
+    path = scratch.run_dir(spark, sf_dir, "ivf-index")
     ivf_index_build(emb, path, n_cells=16)
     return ivf_index_search(
         emb, path, emb.where(F.col("vec_id") < 5), k=3, n_cells=16, n_probe=4
@@ -1077,7 +1063,7 @@ def x159_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    path = _index_path(spark, sf_dir, "ivfpq-index")
+    path = scratch.run_dir(spark, sf_dir, "ivfpq-index")
     cbp = F.col("vec_id") < 8
     ivfpq_index_build(emb, path, codebook_pred=cbp, n_cells=16)
     top = ivfpq_index_search(
@@ -1425,7 +1411,7 @@ def x164_index_upsert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    path = _index_path(spark, sf_dir, "ivf-upsert")
+    path = scratch.run_dir(spark, sf_dir, "ivf-upsert")
     ivf_index_build(emb, path, n_cells=16)
     delta = (
         emb.where(F.col("vec_id") < 10)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from video_streamer_spark import scratch
 from video_streamer_spark.catalog import table
 from video_streamer_spark.functions.caching import pooled
 from video_streamer_spark.queries import query
@@ -739,23 +740,13 @@ _register_x209_oracle()
     """,
 )
 def x210_acid_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import itertools
-    import os
-
     from video_streamer_spark.operators.table_format import (
         create_table,
         merge_table,
         read_table,
     )
 
-    if not hasattr(x210_acid_snapshot_merge, "_seq"):
-        x210_acid_snapshot_merge._seq = itertools.count()
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = (
-        f"/tmp/vss-acid/{app}-{tag}/run-"
-        f"{next(x210_acid_snapshot_merge._seq)}"
-    )
+    path = scratch.run_dir(spark, sf_dir, "acid")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
@@ -834,23 +825,13 @@ def x210_acid_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x211_table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import itertools
-    import os
-
     from video_streamer_spark.operators.table_format import (
         create_table,
         merge_table,
         table_changes,
     )
 
-    if not hasattr(x211_table_change_feed, "_seq"):
-        x211_table_change_feed._seq = itertools.count()
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = (
-        f"/tmp/vss-cdf/{app}-{tag}/run-"
-        f"{next(x211_table_change_feed._seq)}"
-    )
+    path = scratch.run_dir(spark, sf_dir, "cdf")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -914,23 +895,13 @@ def x211_table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x212_optimized_pruned_range_read(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import itertools
-    import os
-
     from video_streamer_spark.operators.table_format import (
         create_table,
         optimize_table,
         read_table_where,
     )
 
-    if not hasattr(x212_optimized_pruned_range_read, "_seq"):
-        x212_optimized_pruned_range_read._seq = itertools.count()
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = (
-        f"/tmp/vss-zonemap/{app}-{tag}/run-"
-        f"{next(x212_optimized_pruned_range_read._seq)}"
-    )
+    path = scratch.run_dir(spark, sf_dir, "zonemap")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"

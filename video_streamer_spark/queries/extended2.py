@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark import scratch
 from video_streamer_spark.catalog import table
 from video_streamer_spark.queries import query
 from video_streamer_spark.queries.curation import _R4, _sql_cos
@@ -97,7 +98,7 @@ def x214_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table_where,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-bloom")
+    path = scratch.run_dir(spark, sf_dir, "bloom")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -158,7 +159,7 @@ def x215_tombstone_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-tomb")
+    path = scratch.run_dir(spark, sf_dir, "tomb")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -190,140 +191,6 @@ def x215_tombstone_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 100.0
         ).alias("total_price"),
     )
-
-
-_RUN_SEQ = __import__("itertools").count()
-
-# Scratch dirs older than this under a managed /tmp root belong to a
-# dead session and are swept on the next entry (ADVICE r9).
-_SCRATCH_STALE_SECS = 24 * 3600
-
-
-def _sweep_stale_scratch(root: str, keep: str) -> None:
-    """Best-effort removal of sibling app dirs under ``root`` that are
-    older than :data:`_SCRATCH_STALE_SECS` (a crashed or long-gone
-    session's leftovers). Never touches ``keep`` (the live slot);
-    races with a concurrent sweeper are benign (ignore_errors).
-
-    Staleness is judged by slot MTIME, which every session REFRESHES on
-    each use (``os.utime`` in the callers) — reads alone don't update a
-    directory's mtime, so without the explicit touch a >24 h soak
-    session would look dead to every newer session on the host (review
-    r9). Residual contract: a session idle on this query family for
-    longer than the horizon may lose its scratch to a sibling's sweep —
-    acceptable for /tmp bench scratch, rebuilt on next use."""
-    import os
-    import shutil
-    import time
-
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    now = time.time()
-    for name in entries:
-        p = os.path.join(root, name)
-        if p == keep:
-            continue
-        try:
-            if now - os.path.getmtime(p) > _SCRATCH_STALE_SECS:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            continue
-
-
-def _touch_slot(slot: str) -> None:
-    """Mark a scratch slot as live (see _sweep_stale_scratch)."""
-    import os
-
-    os.makedirs(slot, exist_ok=True)
-    try:
-        os.utime(slot)
-    except OSError:
-        pass
-
-
-def _fresh_run_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
-    """Allocate a fresh ``run-<n>`` scratch dir for a lifecycle query
-    (x214/x215 build a new versioned table per invocation so reruns
-    never collide with committed manifests), DELETING the slot's prior
-    run dirs first — a long-lived session holds at most ONE live table
-    per (query, app, sf) instead of leaking every historical run
-    (round-8 VERDICT, What's wrong 1). Safe because invocations of a
-    lifecycle query are sequential per session: by the time run N+1 is
-    allocated, run N's DataFrame has been materialized and dropped.
-    Stale sibling app dirs (dead sessions) are swept opportunistically.
-    """
-    import os
-    import shutil
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    app = spark.sparkContext.applicationId
-    root = f"/tmp/{base}"
-    slot = f"{root}/{app}-{tag}"
-    try:
-        for name in os.listdir(slot):
-            shutil.rmtree(os.path.join(slot, name), ignore_errors=True)
-    except OSError:
-        pass
-    _touch_slot(slot)  # keep a live session's slot out of the sweep
-    _sweep_stale_scratch(root, keep=slot)
-    return f"{slot}/run-{next(_RUN_SEQ)}"
-
-
-def prebuilt_table_path(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Path of the (app, sf)-scoped prebuilt table. Exposed so DECLARED
-    maintenance steps (the bench's timed scale3 compaction) can operate
-    on the table a query family already built this session without
-    duplicating the slot-naming rule."""
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    app = spark.sparkContext.applicationId
-    return f"/tmp/vss-benchtable/{app}-{tag}/{kind}"
-
-
-def _prebuilt_table(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
-    """Build-once-per-(app, sf) versioned table for READ-path queries.
-
-    x212/x214/x215 time the whole lifecycle (create + commit + read) —
-    right for correctness, wrong for the HEADLINE bench, whose job is
-    to price the READ path a warehouse pays per query against a table
-    that already exists (round-7 VERDICT, What's wrong 2). The build
-    runs once per (applicationId, sf tag) — bench warmup builds it,
-    every measured rep reads it, exactly like the splittable mirror
-    keeps layout cost outside the timed region. Per-app pathing means
-    concurrent sessions never share a mutable dir (same rule as
-    queries/corpus._index_path)."""
-    import os
-
-    import shutil
-    import uuid
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    app = spark.sparkContext.applicationId
-    path = prebuilt_table_path(spark, sf_dir, kind)
-    # build into a private staging dir and RENAME into place: a build
-    # that dies halfway (interrupted optimize, OOM) must not wedge the
-    # (app, sf) slot — retrying create_table against a half-built table
-    # would raise VersionConflictError forever. The rename is atomic;
-    # a concurrent builder losing the rename race just discards its
-    # staging copy and reads the winner's.
-    _touch_slot(f"/tmp/vss-benchtable/{app}-{tag}")
-    _sweep_stale_scratch("/tmp/vss-benchtable", keep=f"/tmp/vss-benchtable/{app}-{tag}")
-    if not os.path.exists(path):
-        stage = f"{path}.building-{uuid.uuid4().hex}"
-        try:
-            build(stage)
-        except BaseException:
-            # a failed build must not leak its staging dir (ADVICE r9)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        try:
-            os.rename(stage, path)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)  # another won
-    return path
 
 
 # x216 — ZONE-MAP RANGE READ OVER A PRE-BUILT OPTIMIZED TABLE: the
@@ -363,7 +230,7 @@ def x216_zonemap_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         create_table(orders, path, ["o_orderkey"], n_buckets=8)
         optimize_table(spark, path, "o_totalprice", files_per_bucket=4)
 
-    path = _prebuilt_table(spark, sf_dir, "zonemap-orders", build)
+    path = scratch.built_dir(spark, sf_dir, "zonemap-orders", build)
     return (
         read_table_where(
             spark, path, "o_totalprice", lo=50000.0, hi=80000.0
@@ -425,7 +292,7 @@ def x217_tombstone_snapshot_read(
             orders.where(F.col("o_orderkey") % 7 == 0).select("o_orderkey"),
         )
 
-    path = _prebuilt_table(spark, sf_dir, "tombstone-orders", build)
+    path = scratch.built_dir(spark, sf_dir, "tombstone-orders", build)
     # string expressions (r14 phase 6): this block was ~145 gateway
     # round-trips of Column builders; the D suffixes keep the literals
     # DOUBLE (bare 100.0 parses as DECIMAL) so the tree is unchanged
@@ -559,7 +426,7 @@ def x219_zorder_2d_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             files_per_bucket=8,
         )
 
-    path = _prebuilt_table(spark, sf_dir, "zorder-orders", build)
+    path = scratch.built_dir(spark, sf_dir, "zorder-orders", build)
     return (
         read_table_where(
             spark,
@@ -771,7 +638,7 @@ def x222_maintain_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-maint")
+    path = scratch.run_dir(spark, sf_dir, "maint")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -866,7 +733,7 @@ def x223_rebase_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-rebase")
+    path = scratch.run_dir(spark, sf_dir, "rebase")
     # keys -1 and -2 route to different 8-bucket homes today; assert it
     # from the router itself so a future hash change fails loudly
     # instead of silently testing the non-rebase path
@@ -982,7 +849,7 @@ def x224_cdf_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_changes,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-ivm")
+    path = scratch.run_dir(spark, sf_dir, "ivm")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1125,7 +992,7 @@ def x225_minmax_dirty_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_minmax_view_pass,
     )
 
-    root = _fresh_run_dir(spark, sf_dir, "vss-minmax")
+    root = scratch.run_dir(spark, sf_dir, "minmax")
     src, view, ckpt = f"{root}/src", f"{root}/view", f"{root}/ckpt"
 
     base = table(spark, sf_dir, "orders").select(
@@ -1221,7 +1088,7 @@ def x226_merge_into_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-mergeinto")
+    path = scratch.run_dir(spark, sf_dir, "mergeinto")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1312,7 +1179,7 @@ def x227_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    root = _fresh_run_dir(spark, sf_dir, "vss-clone")
+    root = scratch.run_dir(spark, sf_dir, "clone")
     src, dst = f"{root}/src", f"{root}/clone"
 
     orders = table(spark, sf_dir, "orders").select(
@@ -1405,7 +1272,7 @@ def x228_restore_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         restore_table,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-restore")
+    path = scratch.run_dir(spark, sf_dir, "restore")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1544,7 +1411,7 @@ def x230_snapshot_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         sync_table,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-sync")
+    path = scratch.run_dir(spark, sf_dir, "sync")
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1700,7 +1567,7 @@ def x232_table_sql_statements(
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-tablesql")
+    path = scratch.run_dir(spark, sf_dir, "tablesql")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
@@ -1824,7 +1691,7 @@ def x233_streaming_curation_pipeline(
     from video_streamer_spark.streaming.drain import drain_or_raise
     from video_streamer_spark.streaming.pipeline import stream_dir
 
-    root = _fresh_run_dir(spark, sf_dir, "vss-curation")
+    root = scratch.run_dir(spark, sf_dir, "curation")
     frames_dir = f"{root}/frames"
     det, view, ckpt = f"{root}/det", f"{root}/view", f"{root}/ckpt"
 
@@ -1954,7 +1821,7 @@ def x234_dml_time_travel_statements(
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-dmlsql")
+    path = scratch.run_dir(spark, sf_dir, "dmlsql")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
@@ -2115,7 +1982,7 @@ def x237_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-checks")
+    path = scratch.run_dir(spark, sf_dir, "checks")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
@@ -2270,7 +2137,7 @@ def x239_insert_case_statements(
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-inssql")
+    path = scratch.run_dir(spark, sf_dir, "inssql")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
@@ -2365,7 +2232,7 @@ def x240_not_null_statements(
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-notnull")
+    path = scratch.run_dir(spark, sf_dir, "notnull")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
@@ -2441,7 +2308,7 @@ def x241_show_create_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-showddl")
+    path = scratch.run_dir(spark, sf_dir, "showddl")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
@@ -2515,7 +2382,7 @@ def x242_snapshot_datasource_read(
         register_snapshot_source,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-snapds")
+    path = scratch.run_dir(spark, sf_dir, "snapds")
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_totalprice").cast("double").alias("price"),
@@ -2692,7 +2559,7 @@ def x245_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-widen")
+    path = scratch.run_dir(spark, sf_dir, "widen")
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         (F.col("o_orderkey") % 1000000).cast("int").alias("metric"),
@@ -2759,7 +2626,7 @@ def x246_merge_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_streamer_spark.operators.table_format import create_table
     from video_streamer_spark.operators.table_sql import table_sql
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-bysource")
+    path = scratch.run_dir(spark, sf_dir, "bysource")
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_totalprice").cast("double").alias("price"),
@@ -2848,7 +2715,7 @@ def x247_snapshot_nested_embeddings(
         register_snapshot_source,
     )
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-nestsnap")
+    path = scratch.run_dir(spark, sf_dir, "nestsnap")
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
@@ -2914,8 +2781,8 @@ def x248_catalog_statements(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_streamer_spark import vss_catalog
     from video_streamer_spark.operators.table_sql import table_sql
 
-    main = _fresh_run_dir(spark, sf_dir, "vss-catmain")
-    adj = _fresh_run_dir(spark, sf_dir, "vss-catadj")
+    main = scratch.run_dir(spark, sf_dir, "catmain")
+    adj = scratch.run_dir(spark, sf_dir, "catadj")
     table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_totalprice").cast("double").alias("price"),

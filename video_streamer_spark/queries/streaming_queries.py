@@ -242,10 +242,10 @@ def x249_cdf_stream_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         create_table,
         merge_table,
     )
-    from video_streamer_spark.queries.extended2 import _fresh_run_dir
+    from video_streamer_spark import scratch
     from video_streamer_spark.sources.cdf_source import register_cdf_source
 
-    path = _fresh_run_dir(spark, sf_dir, "vss-nestcdf")
+    path = scratch.run_dir(spark, sf_dir, "nestcdf")
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     create_table(
         emb.where("vec_id % 5 = 0"), path, ["vec_id"], n_buckets=4

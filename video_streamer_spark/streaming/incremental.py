@@ -29,18 +29,16 @@ journal is partition-pruned by day like any fact table.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark import scratch
 from video_streamer_spark.catalog import table
 from video_streamer_spark.functions.parity import round2
 from video_streamer_spark.streaming.drain import drain_or_raise
-
-_seq = itertools.count()
 
 
 def heal_journal_residue(journal: str) -> None:
@@ -151,20 +149,6 @@ def combine_rollup(spark: SparkSession, journal: str) -> DataFrame:
     )
 
 
-def _work_dirs(spark: SparkSession, sf_dir: str, n_splits: int) -> tuple[str, str]:
-    """(reusable src layout dir, per-invocation run dir).
-
-    The src re-layout is deterministic from (sf_dir, n_splits) and is
-    the expensive part (a full copy of events) — keyed by applicationId
-    + sf tag + split count and REUSED within the session. The journal
-    and checkpoint are cheap (partial rows) and per-invocation, so
-    re-runs never share mutable streaming state."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    base = f"/tmp/vss-incr/{app}-{tag}-x{n_splits}"
-    return f"{base}/src", f"{base}/run-{next(_seq)}"
-
-
 def incremental_rollup(
     spark: SparkSession,
     sf_dir: str,
@@ -180,14 +164,21 @@ def incremental_rollup(
     invariant to how events landed in batches — the equivalence the
     journal design guarantees and the oracle checks.
     """
-    src, run = _work_dirs(spark, sf_dir, n_splits)
+    # the re-layout (a full copy of events) is the expensive part and is
+    # deterministic from (sf_dir, n_splits): built once per session; the
+    # journal and checkpoint are per invocation
+    src = scratch.built_dir(
+        spark,
+        sf_dir,
+        f"incr-events-x{n_splits}",
+        lambda stage: table(spark, sf_dir, "events")
+        .select("ts", "event_type", "value")
+        .repartition(n_splits)
+        .write.parquet(stage),
+    )
+    run = scratch.run_dir(spark, sf_dir, "incr")
     journal = f"{run}/journal"
     checkpoint = f"{run}/checkpoint"
-    if not os.path.exists(f"{src}/_SUCCESS"):
-        events = table(spark, sf_dir, "events").select(
-            "ts", "event_type", "value"
-        )
-        events.repartition(n_splits).write.mode("overwrite").parquet(src)
 
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
@@ -234,14 +225,18 @@ def incremental_join_rollup(
     Scale: the journal grows by |segments| per batch, never |orders|;
     the dim is broadcast once; the combine shuffles journal rows only.
     """
-    src, run = _work_dirs(spark, sf_dir + "#join", n_splits)
+    src = scratch.built_dir(
+        spark,
+        sf_dir,
+        f"incr-orders-x{n_splits}",
+        lambda stage: table(spark, sf_dir, "orders")
+        .select("o_custkey", "o_totalprice")
+        .repartition(n_splits)
+        .write.parquet(stage),
+    )
+    run = scratch.run_dir(spark, sf_dir, "incr-join")
     journal = f"{run}/journal"
     checkpoint = f"{run}/checkpoint"
-    if not os.path.exists(f"{src}/_SUCCESS"):
-        orders = table(spark, sf_dir, "orders").select(
-            "o_custkey", "o_totalprice"
-        )
-        orders.repartition(n_splits).write.mode("overwrite").parquet(src)
 
     customer = F.broadcast(
         table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")

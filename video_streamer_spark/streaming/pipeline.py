@@ -26,28 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark import scratch
 from video_streamer_spark.streaming.drain import drain_or_raise
-
-
-def _as_stream_dir(sf_dir: str, name: str) -> str:
-    """Materialize ``{sf_dir}/{name}.parquet`` as a directory of symlinks
-    under /tmp so the streaming file source (directory-oriented) can list
-    it. Idempotent; never writes into the read-only testdata tree.
-    """
-    import hashlib
-    import os
-
-    tag = hashlib.md5(f"{sf_dir}/{name}".encode()).hexdigest()[:10]
-    d = f"/tmp/vss-stream-src/{name}-{tag}"
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{name}.parquet")
-    target = os.path.join(sf_dir, f"{name}.parquet")
-    if not os.path.exists(link):
-        try:
-            os.symlink(target, link)
-        except FileExistsError:
-            pass  # concurrent session won the check-then-create race
-    return d
 
 
 def events_stream(
@@ -58,8 +38,14 @@ def events_stream(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # the streaming file source requires a directory: expose the single
-    # table file through a per-sf temp dir of symlinks (no data copy)
-    src_dir = _as_stream_dir(sf_dir, "events")
+    # table file through a session-scoped dir holding one symlink (no
+    # data copy, never a write into the data dir)
+    src_dir = scratch.built_dir(
+        spark,
+        sf_dir,
+        "stream-events",
+        lambda stage: scratch.link_dir(stage, [f"{sf_dir}/events.parquet"]),
+    )
     reader = spark.readStream.schema(batch_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
